@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
 from cs6913_web_search_engines_spark.functions import tokenizer, varbyte
@@ -160,8 +159,10 @@ class QueryEngine:
         # straight to the segmented tier, skipping the probe + plan +
         # seed-decode sunk cost on every repeat (real workloads
         # repeat: the reference's TREC batch reruns the same 1,097
-        # queries).  Keyed per (conjunctive, term set): prunability is
-        # a property of the terms' posting shapes, not the batch.
+        # queries).  Keyed per (conjunctive, seed_segs, term set):
+        # prunability is a property of the terms' posting shapes and
+        # of the seed θ, not of the batch.  top_k also sets θ but is
+        # fixed per engine (cfg), so it needs no key slot.
         self._route_memo: dict = {}
 
     def _build_len_lookup(self):
@@ -279,7 +280,7 @@ class QueryEngine:
                 # driver-side memo without limit
                 self._df_memo.clear()
             probed = {r["term"]: r["df"] for r in
-                      self.lexicon.filter(F.col("term").isin(unknown))
+                      self.lexicon.filter(block_codec.sql_in("term", unknown))
                       .select("term", "df").collect()}
             for t in unknown:
                 self._df_memo[t] = int(probed.get(t, 0))
@@ -303,7 +304,7 @@ class QueryEngine:
             avg_candidates = total / max(len(queries), 1)
             pruned = (avg_candidates >= PRUNED_MIN_AVG_CANDIDATES
                       or total >= PRUNED_MIN_TOTAL_CANDIDATES)
-            route_key = (conjunctive, frozenset(terms))
+            route_key = (conjunctive, seed_segs, frozenset(terms))
             if pruned and self._route_memo.get(route_key) == "exhaustive":
                 # this exact term set aborted before — don't pay the
                 # probe/plan/seed sunk cost again
@@ -330,7 +331,7 @@ class QueryEngine:
                 # hands such batches back to the segmented kernel.
                 # Only on AUTO routing: an explicit pruned=True keeps
                 # the forced path (bench/test contract).
-                route_key = (conjunctive, frozenset(terms))
+                route_key = (conjunctive, seed_segs, frozenset(terms))
 
                 def fallback():
                     if len(self._route_memo) > DF_MEMO_MAX_TERMS:

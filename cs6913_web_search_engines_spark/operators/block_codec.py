@@ -37,7 +37,7 @@ from collections.abc import Iterable, Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
@@ -507,10 +507,30 @@ def read_index(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _sql_literal(v) -> str:
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def sql_in(expr: str, values) -> Column:
+    """``expr IN (v1, ..., vn)`` over int or string literals, parsed
+    from ONE SQL string: one Python→JVM call whatever the list length
+    (``Column.isin`` makes one call per literal — 0.2–0.35 s for a
+    500-term list, against ~1 ms here).  It plans to the same ``In``/``InSet`` as
+    ``isin``, so shard ``PartitionFilters`` and term ``PushedFilters``
+    still reach the scan.  Strings escape ``\\`` and ``'`` for the
+    parser's default (non-``escapedStringLiterals``) mode.  An empty
+    list matches no rows."""
+    if not values:
+        return F.lit(False)
+    return F.expr(f"{expr} IN ({', '.join(map(_sql_literal, values))})")
+
+
 def term_filter(spark: SparkSession, terms: list[str],
                 cfg: EngineConfig = DEFAULT):
     """Predicate that prunes both shard partitions and term row groups."""
     if not terms:
         return F.lit(False)
     shards = sorted({py_shard(t, cfg) for t in terms})
-    return F.col("shard").isin(shards) & F.col("term").isin(terms)
+    return sql_in("shard", shards) & sql_in("term", terms)

@@ -382,7 +382,7 @@ def search_pruned(
             keys = F.broadcast(keys)
         scan = src
         if scan_segs is not None and 0 < len(scan_segs) <= SCAN_SEG_MAX:
-            scan = scan.filter(F.col("seg").isin([int(s) for s in scan_segs]))
+            scan = scan.filter(block_codec.sql_in("seg", scan_segs))
         kept = scan.join(keys, ["term", "seg", "block_id"])
         # When the driver planner knows the EXACT physical block count
         # (n_keys), size the kernel at ~8 compressed blocks (≤512 KB
@@ -852,9 +852,8 @@ def _search_pruned_driver(
             hi = (need[-1] + 1) * SUPERSEG_FACTOR
             scan = phys.filter((F.col("seg") >= lo) & (F.col("seg") < hi))
             if len(need) <= 4096:
-                scan = scan.filter(
-                    (F.col("seg") / SUPERSEG_FACTOR).cast("long")
-                    .isin(need))
+                scan = scan.filter(block_codec.sql_in(
+                    f"seg div {SUPERSEG_FACTOR}", need))
             budget = PLAN_LOCAL_MAX_META_ROWS - len(mpdf)
             if budget <= 0:
                 raise _DriverPlanOverflow()
@@ -1053,14 +1052,15 @@ def _search_pruned_driver(
     if len(surv_keys) == 0:
         combined = seed_scores
     else:
-        # grouped like the seed keys; merged cut_ub = min with
-        # skipna=False so any no-cut query (NaN) disables chunk
-        # pruning for the shared block
-        surv_g = (surv_keys.groupby(["term", "seg", "block_id"],
-                                    as_index=False)
+        # grouped like the seed keys; merged cut_ub = min, reset to
+        # NaN when any query has no cut (NaN) so that query's chunks
+        # are never pruned from the shared block — vectorised group
+        # min + any-NaN mask, no Python call per group
+        surv_g = (surv_keys.assign(no_cut=surv_keys["cut_ub"].isna())
+                  .groupby(["term", "seg", "block_id"], as_index=False)
                   .agg(query_ids=("query_id", list),
-                       cut_ub=("cut_ub",
-                               lambda s: s.min(skipna=False))))
+                       cut_ub=("cut_ub", "min"), no_cut=("no_cut", "any")))
+        surv_g.loc[surv_g.pop("no_cut"), "cut_ub"] = float("nan")
         phase2 = exact_scores(
             spark.createDataFrame(surv_g, grouped_schema + ", cut_ub double"),
             sorted(set(surv_keys["seg"].tolist())), n_keys=len(surv_g))

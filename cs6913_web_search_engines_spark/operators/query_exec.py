@@ -23,9 +23,11 @@ only in the decode UDF when reading the compressed index.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
@@ -207,6 +209,49 @@ def search_compressed(
                            conjunctive, broadcast_doc_stats=broadcast_doc_stats)
 
 
+def spark_hash_long(v: int) -> int:
+    """Spark's ``hash()`` of a BIGINT — Murmur3_x86_32.hashLong with
+    seed 42, the hash ``HashPartitioning`` places rows by."""
+    m = 0xFFFFFFFF
+
+    def mix(h: int, k: int) -> int:
+        k = (k * 0xCC9E2D51) & m
+        k = ((k << 15) | (k >> 17)) & m
+        h ^= (k * 0x1B873593) & m
+        h = ((h << 13) | (h >> 19)) & m
+        return (h * 5 + 0xE6546B64) & m
+
+    v &= 0xFFFFFFFFFFFFFFFF
+    h = mix(mix(42, v & m), v >> 32) ^ 8
+    h ^= h >> 16
+    h = (h * 0x85EBCA6B) & m
+    h ^= h >> 13
+    h = (h * 0xC2B2AE35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=None)
+def _placement_keys(n: int) -> tuple[int, ...]:
+    """k_p = the smallest non-negative long Spark hash-partitions onto
+    partition p of n: ``pmod(hash(k_p), n) == p``."""
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < n:
+        keys.setdefault(spark_hash_long(k) % n, k)
+        k += 1
+    return tuple(keys[p] for p in range(n))
+
+
+def seg_placement(n: int) -> Column:
+    """Repartition key that puts every row of segment ``seg`` on
+    partition ``seg % n`` under ``repartition(n, key)``: the key is
+    the long that hashes to that partition, looked up from a literal
+    table (one SQL expression, no data pass)."""
+    keys = ", ".join(f"{k}L" for k in _placement_keys(n))
+    return F.expr(f"element_at(array({keys}), CAST(pmod(seg, {n}) AS INT) + 1)")
+
+
 def segment_topk_candidates(
     spark: SparkSession,
     cand: DataFrame,
@@ -284,7 +329,7 @@ def segment_topk_candidates(
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if dfs is None:
         dfs = {r["term"]: r["df"] for r in
-               lexicon.filter(F.col("term").isin(all_terms))
+               lexicon.filter(block_codec.sql_in("term", all_terms))
                .select("term", "df").collect()}
     n_docs = float(stats["total_docs"])
     idf = {t: float(np.log((n_docs - dfs.get(t, 0) + 0.5)
@@ -459,11 +504,13 @@ def segment_topk_candidates(
         cand = cand.filter(block_codec.term_filter(spark, all_terms, cfg))
     return (
         cand.select(*cols)
-        # Range partitioning on the low-cardinality seg key: hash
-        # partitioning leaves Poisson holes (empty partitions beside
-        # double-loaded ones) when n_segs ~ n_partitions — the same
-        # trap fixed in encode_fused/write_runs (commit f7e1d2b).
-        .repartitionByRange(nparts, "seg")
+        # Exact placement: segment s lands on partition s % nparts.
+        # Hashing seg itself leaves Poisson holes (empty partitions
+        # beside double-loaded ones) when n_segs ~ n_partitions, and
+        # range partitioning pays a sampling job that re-scans the
+        # filtered payload on every call.  An explicit-count
+        # repartition is never AQE-coalesced, so the placement holds.
+        .repartition(nparts, seg_placement(nparts))
         .sortWithinPartitions("seg")
         .mapInPandas(kernel, "query_id string, doc_id long, score double")
     )
@@ -490,8 +537,9 @@ def search_segmented(
     query is a subset of each segment's top-k under the same
     (score DESC, doc_id ASC) order — the TakeOrdered argument).  Plan:
 
-        blocks filter(terms) → repartition(seg) [shuffles only the
-        COMPRESSED payload, ~2 bytes/posting] → sortWithinPartitions(seg)
+        blocks filter(terms) → repartition(seg % n) [shuffles only the
+        COMPRESSED payload, ~2 bytes/posting; no sampling job]
+        → sortWithinPartitions(seg)
         → Arrow kernel: decode + BM25 + per-(seg, query) top-k, one
         segment resident at a time → tiny global ranking window over
         n_segs × n_queries × k candidate rows.

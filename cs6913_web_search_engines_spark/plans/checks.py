@@ -7,15 +7,17 @@ tests can pin the plan shape we designed for:
   (``PartitionFilters`` non-empty on the index read);
 * small dimension joins broadcast (``BroadcastHashJoin``);
 * scans prune columns (``ReadSchema`` contains only what's selected);
-* scoring stays inside WholeStageCodegen (no Python in the hot path).
+* scoring stays inside WholeStageCodegen (no Python in the hot path);
+* an action launches only the Spark jobs it needs (``spark_jobs``).
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_text(df: DataFrame, mode: str = "formatted") -> str:
@@ -55,3 +57,25 @@ def read_schema_columns(df: DataFrame) -> list[str]:
                 fields = inside[1].rsplit(">", 1)[0]
                 return [f.split(":")[0] for f in fields.split(",") if ":" in f]
     return []
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
+
+
+def spark_jobs(spark: SparkSession, action) -> int:
+    """Number of Spark jobs ``action()`` launches — run under a fresh
+    job group, read back from the status tracker once the listener
+    bus has caught up.  The caller's job group is restored."""
+    sc = spark.sparkContext
+    saved = {p: sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS}
+    group = f"spark_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for p, v in saved.items():
+            sc.setLocalProperty(p, v)
+    # job-start events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -409,11 +409,44 @@ def test_engine_auto_abort_rank_identity(spark, tmp_path, monkeypatch):
     # the abort taught the router: the same term set now routes
     # straight to the segmented tier (memo populated), same results
     assert engine._route_memo
-    key = (False, frozenset(["alpha", "beta"]))
+    key = (False, 2, frozenset(["alpha", "beta"]))
     assert engine._route_memo.get(key) == "exhaustive"
     got2 = engine.search({"other": "beta alpha"}).collect()
     assert ([("other",) + r[1:] for r in _canon(got2)]
             == [("other",) + r[1:] for r in _canon(got)])
+
+
+def test_route_memo_keyed_by_seed_segs(spark, tmp_path, monkeypatch):
+    """An abort memoised at one seed_segs must not reroute a call with
+    another: θ — and so the survivor ratio the abort judged — depends
+    on how many segments phase 1 seeds."""
+    import cs6913_web_search_engines_spark.engine as eng_mod
+
+    rows = [(d, "alpha beta gamma") for d in range(2048)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    cfg = EngineConfig(segment_docs=64, n_term_shards=4, top_k=10)
+    out = str(tmp_path / "full")
+    ib.build_full(spark, docs, out, cfg, checkpoint_runs=False)
+    monkeypatch.setattr(eng_mod, "PRUNED_MIN_AVG_CANDIDATES", 1)
+    monkeypatch.setattr(eng_mod, "LOCAL_EXEC_MAX_POSTINGS", 0)
+    planned = []
+    real = pruning.search_pruned
+
+    def spy(*a, **k):
+        planned.append(k["seed_segs"])
+        return real(*a, **k)
+
+    monkeypatch.setattr(pruning, "search_pruned", spy)
+    engine = eng_mod.QueryEngine(spark, out, cfg)
+    q = {"q": "alpha beta"}
+    want = _canon(engine.search(q, pruned=False, local=False).collect())
+    assert _canon(engine.search(q, seed_segs=2).collect()) == want
+    assert engine._route_memo == {
+        (False, 2, frozenset(["alpha", "beta"])): "exhaustive"}
+    assert _canon(engine.search(q, seed_segs=2).collect()) == want
+    assert planned == [2]                  # memo hit: no re-plan
+    assert _canon(engine.search(q, seed_segs=8).collect()) == want
+    assert planned == [2, 8]               # other seed_segs: planned
 
 
 def test_rollup_probed_driver_planner(spark, tmp_path, monkeypatch):
