@@ -46,8 +46,12 @@ class EngineConfig:
     # adding only ~4× metadata rows.
     segment_docs: int = 1 << 14
 
-    # Spill/run sizing analog of INDEX_CHUNK_SIZE (config.h:28): number
-    # of shuffle partitions used when writing posting runs.
+    # Spill/run sizing analog of INDEX_CHUNK_SIZE (config.h:28): the
+    # bucket count of index_build.write_runs' resumable posting runs
+    # (one bucket per partition), and the range-partition count of the
+    # fused build (block_codec.encode_fused).  The staged encode and
+    # the streaming run writer name no count: AQE sizes their hash
+    # shuffles to the data.
     run_partitions: int = 32
 
     # Deterministic tie-break for equal scores (SURVEY §2.12.4): the

@@ -201,12 +201,13 @@ class QueryEngine:
             for t in missing:           # negative entries too: a term
                 self._postings_cache.setdefault(t, [])  # absent from
             self._postings_cache_n += fetched           # the index
-            for r in rows:
-                n = int(r["n_postings"])
-                gaps = varbyte.decode(bytes(r["doc_gaps"]), n)
-                ids = varbyte.delta_decode(gaps, chunk)
-                tfs = varbyte.decode(bytes(r["tfs"]), n)
-                self._postings_cache[r["term"]].append((ids, tfs))
+            n = np.array([r["n_postings"] for r in rows], dtype=np.int64)
+            ids, tfs = varbyte.decode_blocks(
+                n, [r["doc_gaps"] for r in rows], [r["tfs"] for r in rows],
+                chunk)
+            cut = np.cumsum(n)[:-1]
+            for r, i, f in zip(rows, np.split(ids, cut), np.split(tfs, cut)):
+                self._postings_cache[r["term"]].append((i, f))
         per_term = {t: self._postings_cache[t]
                     for t in all_terms if self._postings_cache[t]}
         lens = self.len_lookup.value

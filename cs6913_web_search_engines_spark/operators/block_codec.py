@@ -25,17 +25,22 @@ absolute docID.
 
 The kernel runs as one streaming ``mapInPandas`` pass over
 partitions that are hash-partitioned by (term, seg) and sorted by
-(term, seg, doc_id): group state carries across Arrow batches, so
-one Python call handles a whole partition (no per-group invocation
-overhead at millions of terms).
+(term, seg, doc_id).  Each Arrow batch's closed groups are encoded by
+one vectorized call (:func:`_encode_groups`, shared with the fused
+build) and only the open last group carries into the next batch, so
+the numpy call count is per batch, not per group.  Decode is the
+mirror image: :func:`varbyte.decode_blocks` turns a batch of block
+rows back into postings with one VarByte pass per payload column.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable, Iterator
+from itertools import chain
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,168 +57,140 @@ INDEX_SCHEMA = (
 )
 
 
-def _encode_group(term: str, seg: int, doc_ids: np.ndarray,
-                  tfs: np.ndarray, cfg: EngineConfig) -> list[dict]:
-    """Encode one (term, seg) posting run into block rows.
+def _encode_groups(terms, segs, docs, tfs, lens,
+                   cfg: EngineConfig) -> pd.DataFrame:
+    """Encode many ``(term, seg)`` posting groups in one vectorized
+    pass → block rows (``INDEX_SCHEMA`` columns, ``shard`` excluded).
 
-    Delegates to the group-aware batched encoder with a single group —
-    ONE packing/chunk-grid implementation (greedy ≤ block_bytes blocks,
-    16 B metadata per chunk, per-chunk delta resets) instead of two
-    copies whose invariants would have to be edited in lockstep; the
-    fused ≡ staged ≡ streaming byte-identity tests pin the equality.
-    """
-    return _encode_seg_batch(seg, [term], [doc_ids], [tfs], cfg)
-
-
-def _encode_seg_batch(seg: int, terms: list[str],
-                      docs_list: list[list[int]], tfs_list: list[list[int]],
-                      cfg: EngineConfig) -> list[dict]:
-    """Encode ALL of one segment's (term → postings) groups in one
-    vectorized pass.
-
-    With a large vocabulary a segment holds thousands of small groups;
-    per-group numpy calls (~25 each) dominated encode CPU.  Here the
-    groups are concatenated, the chunk grid is computed group-aware,
-    and a single VarByte pass covers everything — identical bytes to
-    per-group :func:`_encode_group` (VarByte is per-value; the chunk
-    grid and delta resets are reproduced exactly).
+    Group ``g`` is ``(terms[g], segs[g])`` and owns the next
+    ``lens[g]`` postings of the concatenated, per-group doc_id-sorted
+    ``docs``/``tfs``.  The chunk grid restarts at every group start;
+    docIDs are delta-gapped with the base reset per chunk; one VarByte
+    pass covers all gaps and one all tfs (VarByte is per-value, so the
+    bytes equal a per-group encode); chunks are packed greedily into
+    blocks of at most ``block_bytes`` (payload + 16 B metadata per
+    chunk, a block always takes its first chunk).  Per-group numpy
+    calls (~25 each) used to dominate encode CPU at thousands of small
+    groups per batch; here the call count is fixed per batch, and only
+    the chunks of groups larger than one block see a Python loop.
     """
     chunk = cfg.postings_per_chunk
-    lens = np.fromiter((len(d) for d in docs_list), dtype=np.int64,
-                       count=len(docs_list))
-    all_docs = np.concatenate([np.asarray(d, dtype=np.int64) for d in docs_list])
-    all_tfs = np.concatenate([np.asarray(t, dtype=np.int64) for t in tfs_list])
-    g_starts = np.zeros(lens.size, dtype=np.int64)
-    np.cumsum(lens[:-1], out=g_starts[1:])
+    docs = np.asarray(docs, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    # chunk grid: chunk k of group g starts at g_start + k * chunk
+    n_chunks = (lens + chunk - 1) // chunk
+    first_chunk = np.cumsum(n_chunks) - n_chunks
+    grp = np.repeat(np.arange(lens.size), n_chunks)
+    k = np.arange(grp.size) - first_chunk[grp]
+    chunk_starts = (np.cumsum(lens) - lens)[grp] + k * chunk
+    chunk_ends = np.append(chunk_starts[1:], docs.size)
 
-    # global chunk grid: per group, chunks start at g_start + k*chunk
-    chunk_starts = np.concatenate(
-        [gs + np.arange(0, ln, chunk, dtype=np.int64)
-         for gs, ln in zip(g_starts, lens)]
-    )
-    n_chunks_per_group = (lens + chunk - 1) // chunk
-
-    # delta-gap with reset at every chunk start (== per-group
-    # delta_encode: group starts are chunk starts too)
-    gaps = all_docs.copy()
-    gaps[1:] -= all_docs[:-1]
-    gaps[chunk_starts] = all_docs[chunk_starts]
-
+    gaps = docs.copy()
+    gaps[1:] -= docs[:-1]
+    gaps[chunk_starts] = docs[chunk_starts]
     gap_arr, gap_groups = varbyte._encode_arr(gaps)
-    tf_arr, tf_groups = varbyte._encode_arr(all_tfs)
+    tf_arr, tf_groups = varbyte._encode_arr(tfs)
     gap_sizes = np.add.reduceat(gap_groups, chunk_starts)
     tf_sizes = np.add.reduceat(tf_groups, chunk_starts)
-    chunk_ends = np.append(chunk_starts[1:], all_docs.size)
-    # group boundaries also end chunks; chunk_starts already includes
-    # every group start, so chunk_ends is correct except where a group
-    # ends mid-gap — impossible: next group's first chunk start is the
-    # current group's end.
-    last_docs = all_docs[chunk_ends - 1]
+    last_docs = docs[chunk_ends - 1]
     counts = chunk_ends - chunk_starts
-    max_tfs = np.maximum.reduceat(all_tfs, chunk_starts)
-    gap_offs = np.zeros(chunk_starts.size + 1, dtype=np.int64)
-    np.cumsum(gap_sizes, out=gap_offs[1:])
-    tf_offs = np.zeros(chunk_starts.size + 1, dtype=np.int64)
-    np.cumsum(tf_sizes, out=tf_offs[1:])
-    gap_buf = gap_arr.tobytes()
-    tf_buf = tf_arr.tobytes()
+    max_tfs = np.maximum.reduceat(tfs, chunk_starts)
 
-    rows: list[dict] = []
-    ci0 = 0
-    for gi, term in enumerate(terms):
-        nck = int(n_chunks_per_group[gi])
-        block_id = 0
-        a = ci0
-        block_bytes = 0
-        for ci in range(ci0, ci0 + nck):
-            sz = int(gap_sizes[ci] + tf_sizes[ci]) + 16
-            if ci > a and block_bytes + sz > cfg.block_bytes:
-                rows.append(_chunkrange_row(
-                    term, seg, block_id, a, ci, all_docs, chunk_starts,
-                    last_docs, counts, max_tfs, gap_buf, gap_offs,
-                    tf_buf, tf_offs))
-                block_id += 1
-                a = ci
-                block_bytes = 0
-            block_bytes += sz
-        rows.append(_chunkrange_row(
-            term, seg, block_id, a, ci0 + nck, all_docs, chunk_starts,
-            last_docs, counts, max_tfs, gap_buf, gap_offs, tf_buf, tf_offs))
-        ci0 += nck
-    return rows
+    # greedy packing; a group within one block's budget is one block
+    sizes = gap_sizes + tf_sizes + 16
+    block_id = np.zeros(grp.size, dtype=np.int64)
+    big = np.flatnonzero(np.add.reduceat(sizes, first_chunk)
+                         > cfg.block_bytes)
+    sz = sizes.tolist()
+    for g in big:
+        a = int(first_chunk[g])
+        bid, acc = 0, 0
+        for ci in range(a, a + int(n_chunks[g])):
+            if acc and acc + sz[ci] > cfg.block_bytes:
+                bid, acc = bid + 1, 0
+            acc += sz[ci]
+            block_id[ci] = bid
+    new_block = np.ones(grp.size, dtype=bool)
+    new_block[1:] = (grp[1:] != grp[:-1]) | (block_id[1:] != block_id[:-1])
+    bs = np.flatnonzero(new_block)          # first chunk of each block
+    be = np.append(bs[1:], grp.size)        # one past its last chunk
+    bgrp = grp[bs]
 
+    def chunk_lists(values, typ):
+        return pa.ListArray.from_arrays(
+            pa.array(np.append(bs, grp.size).astype(np.int32)),
+            pa.array(values, type=typ))
 
-def _chunkrange_row(term, seg, block_id, a, b, all_docs, chunk_starts,
-                    last_docs, counts, max_tfs, gap_buf, gap_offs,
-                    tf_buf, tf_offs) -> dict:
-    return {
-        "term": term,
-        "seg": seg,
-        "block_id": block_id,
-        "n_postings": int(counts[a:b].sum()),
-        "first_doc_id": int(all_docs[chunk_starts[a]]),
-        "last_doc_id": int(last_docs[b - 1]),
-        "max_tf": int(max_tfs[a:b].max()),
-        "chunk_last_doc_ids": last_docs[a:b].tolist(),
-        "chunk_counts": counts[a:b].astype(np.int32).tolist(),
-        "chunk_max_tfs": max_tfs[a:b].astype(np.int32).tolist(),
+    def payload(buf, n_bytes):
+        offs = np.zeros(grp.size + 1, dtype=np.int64)
+        np.cumsum(n_bytes, out=offs[1:])
         # per-chunk payload sizes — the reference's docIdSizeList /
-        # freqSizeList (Lexicon.cpp:196-214): with these, a decoder can
-        # SKIP a chunk's bytes without scanning them (VarByte has no
-        # other random access), which is what chunk-level block-max
-        # pruning needs (query_exec.segment_topk_candidates)
-        "chunk_gap_bytes": (gap_offs[a + 1:b + 1]
-                            - gap_offs[a:b]).astype(np.int32).tolist(),
-        "chunk_tf_bytes": (tf_offs[a + 1:b + 1]
-                           - tf_offs[a:b]).astype(np.int32).tolist(),
-        "doc_gaps": gap_buf[gap_offs[a]:gap_offs[b]],
-        "tfs": tf_buf[tf_offs[a]:tf_offs[b]],
-    }
+        # freqSizeList (Lexicon.cpp:196-214): with these, a decoder
+        # can SKIP a chunk's bytes without scanning them (VarByte has
+        # no other random access), which is what chunk-level
+        # block-max pruning needs (query_exec.segment_topk_candidates)
+        return (chunk_lists(n_bytes, pa.int32()),
+                pa.Array.from_buffers(
+                    pa.binary(), bs.size,
+                    [None, pa.py_buffer(offs[np.append(bs, grp.size)]
+                                        .astype(np.int32)),
+                     pa.py_buffer(buf)]))
+
+    gap_lists, gap_bin = payload(gap_arr, gap_sizes)
+    tf_lists, tf_bin = payload(tf_arr, tf_sizes)
+    return pa.table({
+        "term": pa.array(np.asarray(terms, dtype=object)[bgrp],
+                         type=pa.string()),
+        "seg": pa.array(np.asarray(segs, dtype=np.int64)[bgrp]),
+        "block_id": pa.array(block_id[bs].astype(np.int32)),
+        "n_postings": pa.array(np.add.reduceat(counts, bs).astype(np.int32)),
+        "first_doc_id": pa.array(docs[chunk_starts[bs]]),
+        "last_doc_id": pa.array(last_docs[be - 1]),
+        "max_tf": pa.array(np.maximum.reduceat(max_tfs, bs).astype(np.int32)),
+        "chunk_last_doc_ids": chunk_lists(last_docs, pa.int64()),
+        "chunk_counts": chunk_lists(counts, pa.int32()),
+        "chunk_max_tfs": chunk_lists(max_tfs, pa.int32()),
+        "chunk_gap_bytes": gap_lists,
+        "chunk_tf_bytes": tf_lists,
+        "doc_gaps": gap_bin,
+        "tfs": tf_bin,
+    }).to_pandas()
 
 
 def _encode_stream(cfg: EngineConfig):
-    """mapInPandas kernel with cross-batch group carry-over."""
+    """mapInPandas kernel over (term, seg, doc_id)-sorted postings.
+
+    Every group that closes inside an Arrow batch is encoded by ONE
+    :func:`_encode_groups` call for that batch; only the batch's last,
+    possibly open group is carried into the next one.  A group holds
+    at most ``segment_docs`` postings, so the carry stays bounded.
+    """
 
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        key: tuple[str, int] | None = None
-        docs_acc: list[np.ndarray] = []
-        tfs_acc: list[np.ndarray] = []
-        out: list[dict] = []
-
-        def close_group() -> None:
-            nonlocal docs_acc, tfs_acc
-            if key is not None and docs_acc:
-                d = np.concatenate(docs_acc)
-                t = np.concatenate(tfs_acc)
-                out.extend(_encode_group(key[0], key[1], d, t, cfg))
-            docs_acc, tfs_acc = [], []
-
+        carry = None            # (terms, segs, docs, tfs) of the open group
         for pdf in batches:
             if pdf.empty:
                 continue
-            terms = pdf["term"].values
-            segs = pdf["seg"].values
-            docs = pdf["doc_id"].values.astype(np.int64)
-            tfs = pdf["tf"].values.astype(np.int64)
-            # boundaries where (term, seg) changes
-            change = np.empty(len(pdf), dtype=bool)
-            change[0] = True
+            cols = (pdf["term"].values,
+                    pdf["seg"].values.astype(np.int64),
+                    pdf["doc_id"].values.astype(np.int64),
+                    pdf["tf"].values.astype(np.int64))
+            if carry is not None:
+                cols = tuple(np.concatenate(p) for p in zip(carry, cols))
+            terms, segs = cols[0], cols[1]
+            change = np.ones(terms.size, dtype=bool)
             change[1:] = (terms[1:] != terms[:-1]) | (segs[1:] != segs[:-1])
             starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(pdf))
-            for s, e in zip(starts, ends):
-                k = (terms[s], int(segs[s]))
-                if k != key:
-                    close_group()
-                    key = k
-                docs_acc.append(docs[s:e])
-                tfs_acc.append(tfs[s:e])
-            if len(out) >= 256:
-                yield pd.DataFrame(out)
-                out = []
-        close_group()
-        if out:
-            yield pd.DataFrame(out)
+            last = starts[-1]
+            carry = tuple(c[last:] for c in cols)
+            if starts.size > 1:
+                yield _encode_groups(terms[starts[:-1]], segs[starts[:-1]],
+                                     cols[2][:last], cols[3][:last],
+                                     np.diff(starts), cfg)
+        if carry is not None:
+            yield _encode_groups(carry[0][:1], carry[1][:1], carry[2],
+                                 carry[3], [carry[2].size], cfg)
 
     return fn
 
@@ -237,6 +214,11 @@ def encode_index(postings: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
 
     Physical plan: one hash shuffle on (term, seg) with in-partition
     sort — the distributed k-way merge — then a streaming encode pass.
+    The shuffle names no partition count, so AQE coalesces it to the
+    data's size: a small drain or compaction runs a few encode tasks
+    (each Python task has a fixed start cost) and writes few part
+    files.  The sort sits above the coalesced shuffle read, so every
+    partition is still ordered by (term, seg, doc_id).
     """
     with_seg = postings.withColumn(
         # integer `div`, not double division: a float64 quotient can
@@ -244,7 +226,7 @@ def encode_index(postings: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
         "seg", F.expr(f"doc_id div {cfg.segment_docs}")
     )
     arranged = (
-        with_seg.repartition(cfg.run_partitions, "term", "seg")
+        with_seg.repartition("term", "seg")
         .sortWithinPartitions("term", "seg", "doc_id")
     )
     blocks = arranged.mapInPandas(_encode_stream(cfg), INDEX_SCHEMA)
@@ -295,25 +277,23 @@ def _fused_stream(cfg: EngineConfig):
         acc: dict[str, tuple[list, list]] = {}
         doc_rows: list[tuple[int, int, int]] = []
 
-        def flush_seg() -> list[dict]:
+        def flush_seg() -> list[pd.DataFrame]:
             nonlocal acc
             if not acc:
                 return []
             terms = sorted(acc)
-            rows = _encode_seg_batch(
-                cur_seg, terms,
-                [acc[t][0] for t in terms],
-                [acc[t][1] for t in terms], cfg,
-            )
+            lens = [len(acc[t][0]) for t in terms]
+            n = sum(lens)
+            docs = np.fromiter(chain.from_iterable(acc[t][0] for t in terms),
+                               dtype=np.int64, count=n)
+            tfs = np.fromiter(chain.from_iterable(acc[t][1] for t in terms),
+                              dtype=np.int64, count=n)
             acc = {}
-            return rows
+            return [_encode_groups(terms, np.full(len(terms), cur_seg),
+                                   docs, tfs, lens, cfg)]
 
-        def emit(rows: list[dict], docs: list) -> pd.DataFrame:
-            frames = []
-            if rows:
-                b = pd.DataFrame(rows)
-                b["kind"] = 0
-                frames.append(b)
+        def emit(blocks: list[pd.DataFrame], docs: list) -> pd.DataFrame:
+            frames = [b.assign(kind=0) for b in blocks]
             if docs:
                 d = pd.DataFrame(
                     docs, columns=["doc_id", "byte_len", "distinct_terms"]
@@ -346,7 +326,7 @@ def _fused_stream(cfg: EngineConfig):
             return out
 
         for pdf in batches:
-            out: list[dict] = []
+            out: list[pd.DataFrame] = []
             for doc_id, text in zip(pdf["doc_id"].values, pdf["text"].values):
                 doc_id = int(doc_id)
                 seg = doc_id // cfg.segment_docs
@@ -428,35 +408,14 @@ def _decode_stream(cfg: EngineConfig, extra_cols: tuple[str, ...] = (),
 
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            terms: list[str] = []
-            extras: dict[str, list] = {c: [] for c in extra_cols}
-            docs: list[np.ndarray] = []
-            tfs: list[np.ndarray] = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.n_postings)
-                gaps = varbyte.decode(bytes(row.doc_gaps), n)
-                d = varbyte.delta_decode(gaps, chunk)
-                t = varbyte.decode(bytes(row.tfs), n)
-                terms.append(row.term)
-                for c in extra_cols:
-                    extras[c].append(getattr(row, c))
-                docs.append(d)
-                tfs.append(t)
-            if not terms:
-                empty = {**{c: [] for c in extra_cols},
-                         "term": [], "doc_id": [], "tf": []}
-                if len_bc is not None:
-                    empty["doc_len"] = []
-                yield pd.DataFrame(empty)
-                continue
-            counts = [d.size for d in docs]
-            all_docs = np.concatenate(docs)
+            n = pdf["n_postings"].values.astype(np.int64)
+            all_docs, tfs = varbyte.decode_blocks(
+                n, pdf["doc_gaps"].values, pdf["tfs"].values, chunk)
             data = {
-                **{c: np.repeat(np.array(extras[c], dtype=object), counts)
-                   for c in extra_cols},
-                "term": np.repeat(np.array(terms, dtype=object), counts),
+                **{c: np.repeat(pdf[c].values, n) for c in extra_cols},
+                "term": np.repeat(pdf["term"].values, n),
                 "doc_id": all_docs,
-                "tf": np.concatenate(tfs).astype(np.int32),
+                "tf": tfs.astype(np.int32),
             }
             if len_bc is not None:
                 # page-table-in-RAM lookup (reference main.cpp:99-108):

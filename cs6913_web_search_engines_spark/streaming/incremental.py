@@ -221,10 +221,12 @@ def run_incremental_build(
     def _append_run(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent sink: dynamic overwrite of exactly this batch's
         # run=<batch_id> partition — an at-least-once replay rewrites
-        # the same run instead of duplicating it
+        # the same run instead of duplicating it.  No fixed partition
+        # count: AQE sizes the shuffle to the micro-batch, so a small
+        # drop writes a few run files, not one per run_partitions slot
         (
             batch_df.withColumn("run", F.lit(batch_id).cast("int"))
-            .repartition(cfg.run_partitions)
+            .repartition("term")
             .sortWithinPartitions("term", "doc_id")
             .write.partitionBy("run")
             .option("partitionOverwriteMode", "dynamic")

@@ -299,3 +299,104 @@ def test_runs_crash_before_manifest_does_not_duplicate(built, tmp_path_factory):
     assert back.count() == postings.count()
     assert back.distinct().count() == back.count()
     shutil.rmtree(path, ignore_errors=True)
+
+
+def _block_rows(df):
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+              else tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*bc._BLOCK_COLS, "shard").collect()
+    )
+
+
+def test_codec_parity_across_arrow_batches(spark, documents, tmp_path):
+    """With 7-record Arrow batches nearly every (term, seg) group spans
+    batches: the staged encode's carried-over groups, the fused build,
+    a compacted incremental index and the batched block decode must
+    all still agree byte for byte / posting for posting."""
+    import numpy as np
+
+    from cs6913_web_search_engines_spark.streaming import incremental as si
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        cfg = EngineConfig(segment_docs=128, postings_per_chunk=16,
+                           block_bytes=512)
+        docs = documents.select("doc_id", "text")
+        postings = ib.build_postings(docs)
+        staged = _block_rows(bc.encode_index(postings, cfg))
+        fused = _block_rows(bc.fused_blocks(bc.encode_fused(docs, cfg)))
+        assert staged == fused
+        # blocks far larger than one 7-posting batch: groups spanned
+        assert max(r[3] for r in staged) > 7 * 4
+
+        src, out = str(tmp_path / "drops"), str(tmp_path / "idx")
+        for half in (0, 1):
+            (documents.filter(F.col("doc_id") % 2 == half)
+             .repartition(1).write.mode("append").parquet(src))
+            si.run_incremental_build(spark, src, out, cfg)
+        assert si.compact_index(spark, out, cfg,
+                                max_generations=1)["compacted_groups"] > 0
+        assert _block_rows(spark.read.parquet(out + "/index")) == staged
+
+        # decode with a carried tag column and a page table that lacks
+        # some ids (zeros, and ids past its end): exactly those drop
+        posts = [(r["term"], r["doc_id"], r["tf"]) for r in postings.collect()]
+        max_id = max(d for _, d, _ in posts)
+        lens = (np.arange(max_id - 2) % 7 + 1).astype(np.int32)
+        lens[::5] = 0
+        lk = spark.sparkContext.broadcast(lens)
+        tagged = bc.encode_index(postings, cfg).withColumn(
+            "query_id", F.concat(F.lit("q"), F.col("seg").cast("string")))
+        got = sorted(map(tuple, bc.decode_postings(
+            tagged, cfg, extra_cols=("query_id",), len_lookup=lk)
+            .select("query_id", "term", "doc_id", "tf", "doc_len")
+            .collect()))
+        want = sorted(
+            (f"q{d // 128}", t, d, tf, int(lens[d]))
+            for t, d, tf in posts if d < lens.size and lens[d] > 0)
+        assert got == want
+        assert len(want) < len(posts)
+    finally:
+        spark.conf.set(key, saved)
+
+
+def test_encode_groups_batched_equals_per_group():
+    """One _encode_groups call over many groups (the batch path) emits
+    exactly the rows of one call per group, and decodes back."""
+    import numpy as np
+
+    from cs6913_web_search_engines_spark.functions import varbyte
+
+    cfg = EngineConfig(segment_docs=4096, postings_per_chunk=8,
+                       block_bytes=96)
+    rng = np.random.default_rng(7)
+    terms, segs, docs, tfs, lens = [], [], [], [], []
+    for g in range(60):
+        n = int(rng.choice([1, 7, 8, 9, 40, 300]))
+        seg = int(rng.integers(0, 3))
+        d = np.sort(rng.choice(4096, n, replace=False)) + seg * 4096
+        terms.append(f"t{g}")
+        segs.append(seg)
+        docs.append(d)
+        tfs.append(rng.integers(1, 1 << 20, n))
+        lens.append(n)
+    batched = bc._encode_groups(terms, segs, np.concatenate(docs),
+                                np.concatenate(tfs), lens, cfg)
+    single = [bc._encode_groups([t], [s], d, f, [d.size], cfg)
+              for t, s, d, f in zip(terms, segs, docs, tfs)]
+
+    def rows(frames):
+        return [tuple(v.tolist() if isinstance(v, np.ndarray) else v
+                      for v in r)
+                for f in frames for r in f.itertuples(index=False)]
+
+    assert rows([batched]) == rows(single)
+    assert (batched["block_id"] > 0).any()      # multi-block groups
+    got_docs, got_tfs = varbyte.decode_blocks(
+        batched["n_postings"], batched["doc_gaps"], batched["tfs"],
+        cfg.postings_per_chunk)
+    assert got_docs.tolist() == np.concatenate(docs).tolist()
+    assert got_tfs.tolist() == np.concatenate(tfs).tolist()

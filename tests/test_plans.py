@@ -165,6 +165,15 @@ def test_segment_kernel_places_seg_mod_n(spark, one_doc_segments, n):
             assert r["p"] == r["doc_id"] % n, (n, n_segs, r)
 
 
+def test_encode_shuffle_is_sized_by_aqe(built):
+    # a fixed-count repartition (REPARTITION_BY_NUM) is never coalesced:
+    # every small drain or compaction would pay one Python task per slot
+    postings, *_ = built
+    txt = checks.plan_text(bc.encode_index(postings, EngineConfig()))
+    ex = [ln for ln in txt.splitlines() if "hashpartitioning(term" in ln]
+    assert ex and all("REPARTITION_BY_COL" in ln for ln in ex), ex
+
+
 def test_segmented_plan_has_no_range_partitioning(spark, built, index_path):
     import numpy as np
 

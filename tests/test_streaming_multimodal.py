@@ -496,6 +496,29 @@ def test_incremental_build_empty_input_is_a_noop(spark, tmp_path):
                      "out": out}
 
 
+def test_small_drain_writes_few_files(spark, documents, tmp_path):
+    """The drain's shuffles are sized by AQE, not by run_partitions: a
+    500-doc drop must not fan out into one part file per slot in every
+    shard= dir (and run= dir) — each file is a Python task paid for."""
+    import os
+
+    src = str(tmp_path / "drops")
+    documents.repartition(1).write.parquet(src)
+    out = str(tmp_path / "idx")
+    si.run_incremental_build(spark, src, out, EngineConfig())
+    cap = spark.sparkContext.defaultParallelism
+    dirs = [os.path.join(out, "index", d)
+            for d in os.listdir(os.path.join(out, "index"))
+            if d.startswith("shard=")]
+    dirs += [os.path.join(out, "runs", d)
+             for d in os.listdir(os.path.join(out, "runs"))
+             if d.startswith("run=")]
+    assert len(dirs) > EngineConfig().n_term_shards
+    for d in dirs:
+        parts = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert 1 <= len(parts) <= cap, (d, len(parts))
+
+
 def test_uri_out_single_file_redrain_is_exactly_once(spark, documents,
                                                      tmp_path):
     """URI out + a single-FILE docs input hits the tempdir staging

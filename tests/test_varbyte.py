@@ -73,3 +73,65 @@ def test_chunk_independence():
     gaps = varbyte.delta_encode(doc_ids, chunk)
     back = varbyte.delta_decode(gaps[chunk:], chunk)
     assert (back == doc_ids[chunk:]).all()
+
+
+def _block_row(doc_ids, tfs, chunk):
+    d = np.asarray(doc_ids, dtype=np.int64)
+    return (d.size, varbyte.encode(varbyte.delta_encode(d, chunk)),
+            varbyte.encode(np.asarray(tfs, dtype=np.int64)))
+
+
+def _per_row(rows, chunk):
+    docs, tfs = [], []
+    for n, g, t in rows:
+        docs.append(varbyte.delta_decode(varbyte.decode(g, n), chunk))
+        tfs.append(varbyte.decode(t, n))
+    return np.concatenate(docs), np.concatenate(tfs)
+
+
+def _batched(rows, chunk):
+    return varbyte.decode_blocks([r[0] for r in rows], [r[1] for r in rows],
+                                 [r[2] for r in rows], chunk)
+
+
+def test_decode_blocks_empty_batch():
+    docs, tfs = varbyte.decode_blocks([], [], [], 64)
+    assert docs.size == 0 and tfs.size == 0
+    assert docs.dtype == tfs.dtype == np.int64
+
+
+def test_decode_blocks_one_row():
+    rows = [_block_row([3, 9, 10, 400], [1, 2, 3, 4], 64)]
+    docs, tfs = _batched(rows, 64)
+    assert docs.tolist() == [3, 9, 10, 400]
+    assert tfs.tolist() == [1, 2, 3, 4]
+
+
+def test_decode_blocks_partial_last_chunk_and_zero_leader():
+    # 21 and 5 postings over chunk 8: neither is a multiple of the
+    # chunk size; the second row's chunk-leading doc id is 0 (the one
+    # id whose absolute encoding is a 0x00 byte)
+    a = np.arange(100, 121) * 3
+    b = np.array([0, 1, 5, 6, 7])
+    rows = [_block_row(a, a % 5 + 1, 8), _block_row(b, [9, 1, 1, 1, 2], 8)]
+    docs, tfs = _batched(rows, 8)
+    assert docs.tolist() == a.tolist() + b.tolist()
+    assert tfs.tolist() == (a % 5 + 1).tolist() + [9, 1, 1, 1, 2]
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(st.lists(st.integers(min_value=0, max_value=2**33),
+                      min_size=1, max_size=200), min_size=1, max_size=12),
+    st.sampled_from([1, 3, 16, 64]),
+)
+def test_decode_blocks_mixed_rows_match_per_row(rows_src, chunk):
+    rows = []
+    for gaps_src in rows_src:
+        # strictly increasing; the first id may be 0
+        doc_ids = np.cumsum(np.asarray(gaps_src, dtype=np.int64) + 1) - 1
+        rows.append(_block_row(doc_ids, doc_ids % 1000 + 1, chunk))
+    want_docs, want_tfs = _per_row(rows, chunk)
+    docs, tfs = _batched(rows, chunk)
+    assert docs.tolist() == want_docs.tolist()
+    assert tfs.tolist() == want_tfs.tolist()
