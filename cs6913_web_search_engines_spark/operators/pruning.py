@@ -35,51 +35,56 @@ document-at-a-time cursor walk:
   displace the true top-k.  Negative-idf terms are never
   block-pruned (dropping a negative contribution would inflate).
 
-Everything stays distributed (no driver-side metadata collect):
-θ is a per-query DataFrame joined into the prune filters.  Results
-are provably rank-identical to the exhaustive path — pinned by
-tests/test_pruning.py.
+Planning — bounds, seeds, θ, survivor keys — is ONE set of pandas
+functions over block-metadata rows, the reference's in-RAM
+skip-metadata walk.  When the query terms' physical (term, seg, block)
+rows fit ``PLAN_LOCAL_MAX_META_ROWS`` they are collected and the
+functions run on the driver.  Otherwise the driver holds only the
+(term, super-segment) rollup, prunes whole super-segments with it, and
+the same functions expand each surviving super-segment where its rows
+live, through ``groupBy("sseg").applyInPandas`` — the REPOSE model
+(ICDE 2021): partition-level bounds prune whole partitions, and each
+survivor is expanded locally by the same code.  Decode and scoring
+always run in Spark.  Results are provably rank-identical to the
+exhaustive path on both paths — pinned by tests/test_pruning.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
 from cs6913_web_search_engines_spark.functions import tokenizer
 from cs6913_web_search_engines_spark.operators import block_codec, query_exec
 
-# Below this many PHYSICAL (term, seg, block) metadata rows the
-# PLANNING side (bounds, seeds, θ, survivor keys) runs driver-side in
-# pandas — the reference's own model, which walks skip metadata in RAM
-# (Lexicon.cpp:196-214) — leaving Spark exactly two decode jobs.  The
-# estimate (see ``_estimate_phys_rows``) is a hard upper bound known
-# from the driver df probe before any job runs.  Physical rows carry
-# NO query dimension (round 5): a 256-query batch sharing head terms
-# collects the same ~15 k rows as an 8-query batch — the old
-# query-tagged collect grew as queries × segments (497 k rows at
-# 32 M docs × 256 q) and was the tier's scale ceiling.  1 M rows ≈
-# tens of MB of pandas; past that the fully-distributed planner below
-# takes over (identical results — pinned by tests/test_pruning.py).
+# Up to this many PHYSICAL (term, seg, block) metadata rows the
+# planner runs on the driver over the collected rows, leaving Spark
+# exactly two decode jobs.  The estimate (``_estimate_phys_rows``) is a
+# hard upper bound known from the driver df probe before any job runs;
+# past it, one bounded ``limit(cap + 1)`` probe decides.  Physical rows
+# carry NO query dimension: a 256-query batch sharing head terms
+# collects the same ~15 k rows as an 8-query batch.  1 M rows ≈ tens of
+# MB of pandas.  Beyond it the driver holds only the (term, sseg)
+# rollup, which ``_superseg_factor`` keeps under this same cap.
 PLAN_LOCAL_MAX_META_ROWS = 1_000_000
 
-# Segments per super-segment for the planner's bound hierarchy: both
-# planners prune at sseg = seg // SUPERSEG_FACTOR granularity BEFORE
-# expanding per-query per-segment bounds, so planner work scales with
-# queries × surviving ssegs (+ segs inside them) instead of queries ×
-# all segments (VERDICT r4 #2).  64 × 16 K-doc segments ≈ 1 M docs
-# per sseg; at 10^12 docs that is ~1 M sseg rows per head term — the
-# level a build-time rollup table serves (see search_pruned notes).
+# Segments per super-segment (the floor: ``_superseg_factor`` doubles
+# it while the rollup could outgrow the driver cap).  Bounds are pruned
+# at sseg = seg // factor granularity BEFORE per-query per-segment
+# bounds are expanded, so planner work scales with queries × surviving
+# ssegs (+ segs inside them) instead of queries × all segments.
+# 64 × 16 K-doc segments ≈ 1 M docs per sseg.
 SUPERSEG_FACTOR = 64
 
 # Adaptive abort: after θ/survivor planning (cheap — pandas over the
-# physical metadata plus one small seed decode) the driver planner
-# KNOWS how many query-tagged blocks phase 2 would decode.  When that
-# exceeds this fraction of the exhaustive decode set, the plan is
-# non-pruning — the segmented exhaustive kernel decodes each physical
-# block once with no survivor bookkeeping and wins — so the planner
-# returns the caller-provided fallback instead of executing phase 2.
+# metadata plus one small seed decode) the planner KNOWS how many
+# query-tagged blocks phase 2 would decode.  When that exceeds this
+# fraction of the exhaustive decode set, the plan is non-pruning — the
+# segmented exhaustive kernel decodes each physical block once with no
+# survivor bookkeeping and wins — so the planner returns the
+# caller-provided fallback instead of executing phase 2.
 # CALIBRATED (round 5, forced-tier PRUNED_BENCH rows): shapes where
 # pruning wins keep ≤ 10 % of blocks (hothead 0.6-6 %), shapes where
 # it measurably loses keep ≈ 100 % (zipf 8 M docs: 40.2 s pruned vs
@@ -91,10 +96,17 @@ SUPERSEG_FACTOR = 64
 # prune).
 PRUNED_ABORT_SURVIVOR_RATIO = 0.5
 
+# Seg lists longer than this stay out of the scan predicate (an IN of
+# tens of thousands of literals bloats the plan for a filter that
+# prunes little).
+SCAN_SEG_MAX = 4096
 
-class _DriverPlanOverflow(Exception):
-    """A lazy rollup-mode metadata fetch outgrew the driver budget —
-    the caller replans with the distributed planner."""
+_PHYS_COLS = ["term", "seg", "block_id", "df", "ub"]
+_KEYS_SCHEMA = ("term string, seg long, block_id int, "
+                "query_ids array<string>")
+_SURV_SCHEMA = _KEYS_SCHEMA + ", cut_ub double"
+_SEED_SCHEMA = ("query_id string, seg long, sum_pos double, bound double, "
+                "n_blocks long")
 
 
 def _estimate_meta_rows(queries: dict[str, str], dfs: dict[str, int],
@@ -135,6 +147,25 @@ def _estimate_phys_rows(terms, dfs: dict[str, int], total_docs: int,
         df = dfs.get(t, 0)
         total += min(df, n_segs) + -(-df // chunk)
     return max(1, total)
+
+
+def _superseg_factor(terms, dfs: dict[str, int], total_docs: int,
+                     cfg: EngineConfig) -> int:
+    """Segments per super-segment: ``SUPERSEG_FACTOR`` times the
+    smallest power of two that keeps the (term, sseg) rollup within
+    ``PLAN_LOCAL_MAX_META_ROWS``.  A term spans at most
+    ``min(df, n_ssegs)`` super-segments, so the rollup has at most
+    ``Σ_t min(df_t, ⌈n_segs / factor⌉)`` rows — known from the df
+    probe before any job runs (doc ids dense in ``[0, total_docs)``,
+    as ``_estimate_phys_rows`` assumes).  Stops at one super-segment:
+    then the rollup has one row per term."""
+    n_segs = max(1, -(-total_docs // cfg.segment_docs))
+    factor = SUPERSEG_FACTOR
+    while factor < n_segs and sum(
+            min(dfs.get(t, 0), -(-n_segs // factor))
+            for t in set(terms)) > PLAN_LOCAL_MAX_META_ROWS:
+        factor *= 2
+    return factor
 
 
 def block_upper_bound(cfg: EngineConfig, total_docs: int, avg_len: float,
@@ -197,6 +228,122 @@ def _query_meta(
     return phys.join(F.broadcast(qt), "term"), qt, all_terms, phys
 
 
+# ---------------------------------------------------------------------
+# The planner: pandas over block-metadata rows (term, seg, block_id,
+# df, ub).  ``search_pruned`` runs each step over all collected rows on
+# the driver, or once per super-segment group in Spark — a physical
+# block lies in exactly one super-segment, so a group holds every row
+# its steps need.
+# ---------------------------------------------------------------------
+
+def _term_bounds(blocks: pd.DataFrame, factor: int) -> pd.DataFrame:
+    """Per-(term, seg): best block bound ``term_ub`` and block count,
+    tagged with the super-segment ``seg // factor`` — query-free."""
+    ts = (blocks.groupby(["term", "seg"], as_index=False)
+          .agg(term_ub=("ub", "max"), n_blocks=("ub", "size")))
+    ts["sseg"] = ts["seg"] // factor
+    return ts
+
+
+def _bounds(rows: pd.DataFrame, key: str, conjunctive: bool) -> pd.DataFrame:
+    """Per-(query, ``key``) score bounds from per-(term, ``key``)
+    maxima: ``rows`` is (query_id, term, n_terms, key, term_ub,
+    n_blocks), ``key`` a segment or a super-segment.
+
+    ``sum_pos = Σ_t max(0, ub_t)`` bounds a doc holding ANY subset of
+    the terms — but an empty subset is not a match.  A matching doc
+    contains ≥1 query term t0, whose postings live in the doc's own
+    segment, so
+        score ≤ max_{t0 present} [ub_t0 + Σ_{t'≠t0} max(0, ub_t')]
+              = sum_pos + max_t min(ub_t, 0)
+    — strictly sharper when every term present has a negative ub (the
+    unclamped-idf head-term regime, where the clamped bound is 0 and
+    never falls below a negative θ).  A conjunctive doc holds ALL
+    terms: the plain ``Σ_t ub_t`` bounds it, and a key that never sees
+    some query term cannot match at all — the zigzag-intersection skip
+    (QueryProcessor.cpp:589-634) at segment granularity.  The same
+    derivation holds per super-segment over the per-term maxima, so an
+    sseg bound < θ prunes every member segment without its
+    per-segment bounds ever being computed.  ``n_blocks`` counts the
+    query-tagged blocks under each row."""
+    rows = rows.assign(pos=rows["term_ub"].clip(lower=0.0),
+                       neg=rows["term_ub"].clip(upper=0.0))
+    b = (rows.groupby(["query_id", key], as_index=False)
+         .agg(sum_pos=("pos", "sum"), sum_all=("term_ub", "sum"),
+              best_neg=("neg", "max"), n_present=("term", "count"),
+              n_terms=("n_terms", "first"), n_blocks=("n_blocks", "sum")))
+    b["bound"] = (b["sum_all"] if conjunctive
+                  else b["sum_pos"] + b["best_neg"])
+    if conjunctive:
+        b = b[b["n_present"] == b["n_terms"]]
+    return b
+
+
+def _top(b: pd.DataFrame, key: str, n: int) -> pd.DataFrame:
+    """Each query's ``n`` best rows by (bound desc, key asc) — a total
+    order, so the top of per-group tops is the global top."""
+    return (b.sort_values(["query_id", "bound", key],
+                          ascending=[True, False, True])
+            .groupby("query_id").head(n))
+
+
+def _seg_bounds(ts: pd.DataFrame, qss: pd.DataFrame, qt: pd.DataFrame,
+                conjunctive: bool) -> pd.DataFrame:
+    """Per-(query, seg) bounds, expanded ONLY inside the given
+    (query_id, sseg) rows."""
+    rows = (qss[["query_id", "sseg"]].merge(qt, on="query_id")
+            .merge(ts, on=["term", "sseg"]))
+    return _bounds(rows, "seg", conjunctive)
+
+
+def _block_keys(blocks: pd.DataFrame, ts: pd.DataFrame, segs: pd.DataFrame,
+                qt: pd.DataFrame, total_docs: int) -> pd.DataFrame:
+    """Blocks of each query's terms inside its (query_id, seg, sum_pos,
+    theta) rows that can still beat θ, one row per physical block →
+    (term, seg, block_id, query_ids, cut_ub).
+
+    Block-level bound: the doc CONTAINS this term (ub accounts it
+    exactly) and the others stay optional → the CLAMPED sum_pos, not
+    the sharpened seg bound (which assumes the best single mandatory
+    term and would under-bound docs holding this one).  Negative-idf
+    terms (df ≥ N/2) are never pruned: dropping a negative
+    contribution would inflate a partial score.  ``cut_ub`` = θ minus
+    the other terms' slack is the bound a CHUNK inside the block must
+    still clear (the decode kernel skips chunks below it).  Queries
+    that keep the same physical block share one decode: the merged
+    cut_ub is the MIN over the block's queries, NaN (no chunk cut) if
+    any has none — no θ, or a negative-idf term."""
+    sv = (segs[["query_id", "seg", "sum_pos", "theta"]]
+          .merge(qt[["query_id", "term"]], on="query_id")
+          .merge(ts[["term", "seg", "term_ub"]], on=["term", "seg"])
+          .merge(blocks[["term", "seg", "block_id", "df", "ub"]],
+                 on=["term", "seg"]))
+    t_pos = sv["term_ub"].clip(lower=0.0)
+    no_cut = sv["theta"].isna() | (sv["df"] * 2 >= total_docs)
+    keep = no_cut | (sv["ub"] + sv["sum_pos"] - t_pos >= sv["theta"])
+    sv = sv.assign(cut_ub=(sv["theta"] - (sv["sum_pos"] - t_pos))
+                   .mask(no_cut), no_cut=no_cut)[keep]
+    g = (sv.groupby(["term", "seg", "block_id"], as_index=False)
+         .agg(query_ids=("query_id", list), cut_ub=("cut_ub", "min"),
+              no_cut=("no_cut", "any")))
+    g.loc[g.pop("no_cut"), "cut_ub"] = float("nan")
+    return g
+
+
+def _seg_scan(segs, factor: int = 1) -> Column | None:
+    """Decode-scan predicate for the given segments (super-segments
+    ``seg div factor`` when factor > 1, with a seg range the parquet
+    scan can push down); None when the list is too long to inline."""
+    segs = sorted({int(s) for s in segs})
+    if len(segs) > SCAN_SEG_MAX:
+        return None
+    if factor == 1 or not segs:
+        return block_codec.sql_in("seg", segs)
+    return (F.col("seg").between(segs[0] * factor,
+                                 (segs[-1] + 1) * factor - 1)
+            & block_codec.sql_in(f"seg div {factor}", segs))
+
+
 def search_pruned(
     spark: SparkSession,
     index_path: str,
@@ -222,17 +369,21 @@ def search_pruned(
     Returns (query_id, doc_id, score, rank) — rank-identical to
     :func:`query_exec.search_compressed`.
 
-    Two planners, same algorithm and identical results:
+    One planner (the pandas functions above), run where the metadata
+    fits:
 
-    * **driver planner** (small metadata, the default under
-      ``PLAN_LOCAL_MAX_META_ROWS``): bounds/seeds/θ/survivors in
-      pandas on the collected metadata — the reference's in-RAM
-      skip-metadata walk (Lexicon.cpp:196-214) — so Spark runs only
-      the seed-decode and survivor-decode jobs;
-    * **distributed planner** (``driver_plan=False`` or big
-      metadata): everything stays in DataFrames with the metadata
-      tables materialized once via localCheckpoint — the 10^12-doc
-      regime where even per-query metadata outgrows the driver.
+    * **driver** (``driver_plan=True``, or ``None`` and the physical
+      rows fit ``PLAN_LOCAL_MAX_META_ROWS``): one metadata collect,
+      then bounds, seeds, θ and survivors in pandas; Spark runs only
+      the seed-decode and survivor-decode jobs.  The exact seed and
+      survivor segment sets are pushed into both decode scans.
+    * **Spark** (``driver_plan=False``, or ``None`` and the bounded
+      probe overflowed): the driver collects only the
+      (term, sseg, term_ub, n_blocks) rollup, picks each query's top
+      super-segments and, after the seed decode, the θ-surviving ones;
+      the seed bounds and survivor keys inside them come from the same
+      functions through ``groupBy("sseg").applyInPandas``.  The
+      survivor keys are checkpointed and counted once.
 
     ``broadcast_keys``: the survivor block-key set grows with corpus
     segments; set False beyond broadcast size (same regime as
@@ -241,21 +392,27 @@ def search_pruned(
 
     ``fallback``: zero-arg callable returning a rank-identical
     DataFrame (the engine passes the segmented exhaustive tier).
-    When set, the DRIVER planner aborts to it after θ/survivor
-    planning if the plan turned out non-pruning
-    (``PRUNED_ABORT_SURVIVOR_RATIO``) — the per-shape routing signal
-    the candidate-volume gate cannot see.  None (default) forces the
-    pruned execution regardless.
+    When set, the planner aborts to it after θ/survivor planning if
+    the plan turned out non-pruning (``PRUNED_ABORT_SURVIVOR_RATIO``)
+    — the per-shape routing signal the candidate-volume gate cannot
+    see.  None (default) forces the pruned execution regardless.
+
+    ``counters``: filled with ``exhaustive_blocks`` (query-tagged
+    blocks the exhaustive plan would decode), ``seed_blocks``,
+    ``survivor_blocks`` (seed + phase-2 blocks), ``planner_meta_rows``
+    (metadata rows the driver held), ``aborted_to_fallback`` and
+    ``_chunk_accs`` (the kernel's chunks seen/decoded accumulators,
+    valid after the result's one action).  Setting it launches no job.
     """
     total_docs = int(stats["total_docs"])
     min_len = int(stats.get("min_len", 1))
     max_len = int(stats.get("max_len", 1 << 30))
     src = blocks if blocks is not None else spark.read.parquet(index_path)
-    meta, qt, all_terms, meta_phys = _query_meta(
+    _, qt, all_terms, meta_phys = _query_meta(
         spark, index_path, lexicon, queries, cfg, src, dfs=dfs)
     if dfs is None:
         # probe term dfs once driver-side (qt carries the lexicon df):
-        # kernel idf inputs + the partition-sizing estimate below
+        # kernel idf inputs + the sizing estimates below
         dfs = {r["term"]: int(r["df"]) for r in
                qt.select("term", "df").distinct().collect()}
     # The decode scans must carry the term predicate too: the survivor
@@ -266,48 +423,24 @@ def search_pruned(
     # the filter, shard partition pruning + term row-group pruning keep
     # the payload read proportional to the query postings.
     src = src.filter(block_codec.term_filter(spark, all_terms, cfg))
-    ub_col = block_upper_bound(cfg, total_docs, float(stats["avg_len"]),
-                               min_len, max_len)
-    meta = meta.withColumn("ub", ub_col)
     # PHYSICAL planner metadata: per-(term, seg, block) rows with df +
     # ub attached via a tiny broadcast term→df map — no query
-    # dimension, so its size is invariant in batch width (round 5:
-    # the query-tagged collect grew as queries × segments and was the
-    # pruned tier's scale ceiling)
-    import pandas as pd
-
+    # dimension, so its size is invariant in batch width
     term_df = spark.createDataFrame(
         pd.DataFrame({"term": pd.Series(list(all_terms), dtype=object),
                       "df": pd.Series([int(dfs.get(t, 0))
                                        for t in all_terms], dtype="int64")}),
         "term string, df long")
     phys = (meta_phys.join(F.broadcast(term_df), "term")
-            .withColumn("ub", ub_col))
-    # The metadata tables below (meta, term_seg, seg_ub) are each
-    # referenced 2-4 times across the θ-seed job and the final decode
-    # job, and Python-UDF subplans never canonicalize equal, so
-    # Catalyst recomputes the scan→join→groupBy chain at every
-    # reference — measured as ~40 tiny shuffle stages per search whose
-    # scheduling dominated pruned wall-clock (≈10 s for a batch whose
-    # decode work is milliseconds).  Materialize each once:
-    # localCheckpoint is distributed (executor-memory), and the tables
-    # are O(query terms × blocks) / O(query terms × segments) metadata,
-    # never payload — safe at any corpus size.
-    #
-    # Partition counts are sized from the driver-side df probe when
-    # available: ``_estimate_meta_rows`` is a hard upper bound on every
-    # table and decode set below (per-(query,term) occurrence ×
-    # per-segment partial blocks — not the old per-distinct-term
-    # df//chunk, which undercounted by up to chunk × batch_size).
-    # Tiny queries then run 1-8-task stages instead of scheduling
-    # 25-64 mostly-empty tasks per stage (explicit repartition counts
-    # are NOT AQE-coalesced) — measured as the dominant pruned-tier
-    # constant at small corpora — while head-term queries at large
-    # corpora still fan out.
+            .withColumn("ub", block_upper_bound(
+                cfg, total_docs, float(stats["avg_len"]), min_len, max_len))
+            .select(*_PHYS_COLS))
+    # Kernel partitions sized from the df probe: ``_estimate_meta_rows``
+    # bounds every decode set below, so tiny batches run few-task
+    # stages (explicit repartition counts are NOT AQE-coalesced) while
+    # head-term batches at large corpora still fan out.
     mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
-    est_rows = (_estimate_meta_rows(queries, dfs, total_docs, cfg, mode)
-                if dfs else 1 << 20)
-    n_meta = max(1, min(32, est_rows // 250_000 + 1))
+    est_rows = _estimate_meta_rows(queries, dfs, total_docs, cfg, mode)
     kernel_parts = max(8, min(spark.sparkContext.defaultParallelism * 2,
                               est_rows // 2_000 + 1))
 
@@ -322,96 +455,50 @@ def search_pruned(
         # query results or planning
         counters["_chunk_accs"] = chunk_accs
 
-    # seg lists longer than this stay out of the scan predicate (an
-    # isin of tens of thousands of literals bloats the plan for a
-    # filter that prunes little)
-    SCAN_SEG_MAX = 4096
-
-    def exact_candidates(block_keys: DataFrame,
-                         scan_segs: list[int] | None = None,
-                         n_keys: int | None = None
-                         ) -> DataFrame | None:
+    def exact_candidates(keys: DataFrame, scan: Column | None = None,
+                         n_keys: int = 0) -> DataFrame | None:
         """Fused decode+score+per-segment-top-k over exactly the given
-        (query_id, term, seg, block_id[, cut_ub]) rows → per-segment
-        candidate rows (query_id, doc_id, score), pre-global-ranking.
-        Blocks are tagged with query_id *before* decode so a block
-        kept for query A never leaks partial scores into query B
-        (which may have pruned it).  ``cut_ub`` (survivor keys only)
-        enables chunk-level skipping inside the kernel — see
-        query_exec.segment_topk_candidates.  None when norms aren't in
-        RAM (the kernel needs the resident length array).
+        grouped (term, seg, block_id, query_ids[, cut_ub]) keys →
+        per-segment candidate rows (query_id, doc_id, score),
+        pre-global-ranking.  Blocks are tagged with their queries
+        *before* decode so a block kept for query A never leaks
+        partial scores into query B (which may have pruned it); one
+        row per physical block ships and decodes ONE payload copy for
+        all of them.  ``cut_ub`` enables chunk-level skipping inside
+        the kernel — see query_exec.segment_topk_candidates.  None
+        when norms aren't in RAM (the kernel needs the resident length
+        array).
 
-        ``scan_segs``: when the planner knows the exact segment set
-        driver-side, it is pushed INTO the parquet scan — the join
-        alone prunes nothing at read time, so without it both decode
-        jobs re-read every query-term block's payload bytes (measured:
-        the whole pruned-tier residual at 32 M docs, where term
-        filtering leaves 15 k one-block groups and pruning keeps 24).
-        The fused build writes seg-range-clustered files per shard, so
-        the seg predicate prunes at file/row-group granularity."""
+        ``scan``: the planner's segment predicate, pushed INTO the
+        parquet scan — the join alone prunes nothing at read time, so
+        without it both decode jobs re-read every query-term block's
+        payload bytes.  The fused build writes seg-range-clustered
+        files per shard, so the seg predicate prunes at file/row-group
+        granularity.  ``n_keys`` (physical blocks, or an upper bound)
+        sizes the kernel at ~8 compressed blocks (≤512 KB payload) per
+        task: a ~100-block seed decode schedules ~12 tasks, not 64."""
         if len_lookup is None:
             return None
-        key_cols = ["query_id", "term", "seg", "block_id"]
-        sel = key_cols + (["cut_ub"] if "cut_ub" in block_keys.columns
-                          else [])
-        # Share decode across queries that kept the same physical
-        # block: grouped keys carry query_ids array<string> so the
-        # payload join ships and the kernel decodes ONE copy per
-        # (term, seg, block) instead of one per (query, block) —
-        # without this a batch whose queries overlap on a term pays
-        # payload shuffle + decode per query (measured 256 same-term
-        # queries: 125 k tagged rows for 489 physical blocks).  The
-        # merged cut_ub is the MIN over the block's queries, null if
-        # any has none (decode must keep every chunk any query needs;
-        # per-query add-back is rank-safe — see the kernel docstring).
-        # The driver planner pre-groups in pandas (stage-count parity:
-        # a Spark groupBy here measured +0.5 s of tiny-stage
-        # scheduling per batch, the exact trap localCheckpoint fixed);
-        # the distributed planner groups here.
-        if "query_ids" in block_keys.columns:
-            keys = block_keys
-        else:
-            keys = block_keys.select(*sel).dropDuplicates(key_cols)
-            agg = [F.collect_list("query_id").alias("query_ids")]
-            if "cut_ub" in block_keys.columns:
-                agg.append(
-                    F.when(F.count(F.lit(1)) == F.count("cut_ub"),
-                           F.min("cut_ub")).alias("cut_ub"))
-            keys = keys.groupBy("term", "seg", "block_id").agg(*agg)
         if broadcast_keys:
             keys = F.broadcast(keys)
-        scan = src
-        if scan_segs is not None and 0 < len(scan_segs) <= SCAN_SEG_MAX:
-            scan = scan.filter(block_codec.sql_in("seg", scan_segs))
-        kept = scan.join(keys, ["term", "seg", "block_id"])
-        # When the driver planner knows the EXACT physical block count
-        # (n_keys), size the kernel at ~8 compressed blocks (≤512 KB
-        # payload) per task: a ~100-block seed decode then schedules
-        # ~12 tasks instead of the est-rows-derived 64 — at 32 M docs
-        # × 256 queries the decode work is milliseconds and the
-        # mostly-empty task scheduling WAS the seed job (explicit
-        # repartition counts are never AQE-coalesced).
-        parts = kernel_parts
-        if n_keys is not None:
-            parts = max(8, min(kernel_parts, -(-n_keys // 8)))
+        kept = (src if scan is None else src.filter(scan)).join(
+            keys, ["term", "seg", "block_id"])
         return query_exec.segment_topk_candidates(
             spark, kept, lexicon, stats, queries, cfg,
             len_lookup=len_lookup, conjunctive=conjunctive, dfs=dfs,
-            num_partitions=parts, chunk_counters=chunk_accs,
+            num_partitions=max(8, min(kernel_parts, -(-n_keys // 8))),
+            chunk_counters=chunk_accs,
         )
 
-    def exact_scores(block_keys: DataFrame,
-                     scan_segs: list[int] | None = None,
-                     n_keys: int | None = None) -> DataFrame:
-        """Ranked exact top-k over the given block keys.
+    def exact_scores(keys: DataFrame, scan: Column | None = None,
+                     n_keys: int = 0) -> DataFrame:
+        """Ranked exact top-k over the given grouped block keys.
 
         With norms in RAM this is ONE fused Arrow crossing
-        (``exact_candidates``) plus a tiny global ranking window —
-        instead of decode → per-posting score rows → groupBy → window
-        (two extra shuffles of per-posting width, measured as the
-        dominant pruned-tier constant).  Beyond norms-in-RAM scale it
-        falls back to the distributed doc_stats-join scorer."""
-        cand = exact_candidates(block_keys, scan_segs, n_keys)
+        (``exact_candidates``) plus a tiny global ranking window.
+        Beyond norms-in-RAM scale it falls back to the distributed
+        doc_stats-join scorer."""
+        cand = exact_candidates(keys, scan, n_keys)
         if cand is not None:
             w = Window.partitionBy("query_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
@@ -421,15 +508,12 @@ def search_pruned(
                 .filter(F.col("rank") <= cfg.top_k)
                 .select("query_id", "doc_id", "score", "rank")
             )
-        bk = block_keys
-        if "query_ids" in bk.columns:     # pre-grouped (driver planner)
-            bk = bk.withColumn("query_id", F.explode("query_ids"))
-        keys = bk.select(
-            "query_id", "term", "seg", "block_id"
-        ).dropDuplicates()
+        keys = keys.select(F.explode("query_ids").alias("query_id"),
+                           "term", "seg", "block_id")
         if broadcast_keys:
             keys = F.broadcast(keys)
-        kept = src.join(keys, ["term", "seg", "block_id"])
+        kept = (src if scan is None else src.filter(scan)).join(
+            keys, ["term", "seg", "block_id"])
         postings = block_codec.decode_postings(
             kept, cfg, extra_cols=("query_id",), len_lookup=len_lookup
         )
@@ -439,634 +523,182 @@ def search_pruned(
             broadcast_doc_stats=broadcast_doc_stats,
         )
 
-    probe_pdf = None
-    _PHYS_COLS = ["term", "seg", "block_id", "df", "ub"]
-    if driver_plan is None:
-        est_phys = (_estimate_phys_rows(all_terms, dfs, total_docs, cfg)
-                    if dfs else 1 << 40)
-        driver_plan = (len_lookup is not None
-                       and est_phys <= PLAN_LOCAL_MAX_META_ROWS)
-        if len_lookup is not None and not driver_plan:
-            # The estimate bounds CHUNK rows, so it exceeds the true
-            # block-row count by up to the chunks-per-block packing
-            # factor (~60-100× at 64 KB blocks / ~650 B chunks) —
-            # measured routing the 32 M-doc regime to the distributed
-            # planner (13 s) when the driver planner answers in ~2 s
-            # over the actual 15 k metadata rows.  Probe with ONE
-            # bounded metadata-only collect (CollectLimit stops at
-            # MAX+1 rows, so driver memory stays gated by the same
-            # constant): under the cap, the probe IS the planner's
-            # input; over it, the distributed planner takes over as
-            # before — metadata genuinely beyond the driver.
-            import time as _time
-
-            _t0 = _time.time()
-            probe_pdf = (phys.select(*_PHYS_COLS)
-                         .limit(PLAN_LOCAL_MAX_META_ROWS + 1).toPandas())
-            if counters is not None:
-                counters["_t_probe"] = _time.time() - _t0
-            if len(probe_pdf) <= PLAN_LOCAL_MAX_META_ROWS:
-                driver_plan = True
-            else:
-                probe_pdf = None
-                # Rollup probe (round 5): physical rows outgrew the
-                # driver, but the (term, sseg) ROLLUP is
-                # SUPERSEG_FACTOR× smaller — one distributed
-                # metadata-only agg (exactly what a build-time rollup
-                # table would store; computing it per batch costs one
-                # tiny Spark job and zero format/maintenance surface).
-                # Under the cap, the driver plans hierarchically from
-                # the rollup and fetches per-segment metadata ONLY for
-                # each query's top super-segments and the
-                # θ-surviving ones — extending the driver planner
-                # another 64× before the distributed planner takes
-                # over (and a fetch that outgrows the budget falls
-                # back to it mid-plan via _DriverPlanOverflow).
-                _t0 = _time.time()
-                rollup_pdf = (
-                    phys.groupBy(
-                        "term",
-                        (F.col("seg") / SUPERSEG_FACTOR)
-                        .cast("long").alias("sseg"))
-                    .agg(F.max("ub").alias("ss_ub"),
-                         F.count("*").alias("n_blocks"))
-                    .limit(PLAN_LOCAL_MAX_META_ROWS + 1).toPandas())
-                if counters is not None:
-                    counters["_t_rollup"] = _time.time() - _t0
-                if len(rollup_pdf) <= PLAN_LOCAL_MAX_META_ROWS:
-                    driver_plan = "rollup"
-    if driver_plan:
-        qt_rows = []
-        for qid, q in queries.items():
-            q_terms = tokenizer.split_query(q, mode)
-            for t in q_terms:
-                qt_rows.append((qid, t, len(q_terms)))
-        qt_pdf = pd.DataFrame(qt_rows,
-                              columns=["query_id", "term", "n_terms"])
-        try:
-            return _search_pruned_driver(
-                spark, phys, qt_pdf, exact_scores, exact_candidates,
-                stats, cfg, conjunctive, seed_segs, counters,
-                mpdf=probe_pdf,
-                rollup_pdf=(rollup_pdf if driver_plan == "rollup"
-                            else None),
-                fallback=fallback)
-        except _DriverPlanOverflow:
-            # a lazy fetch outgrew the driver budget (survivor ssegs
-            # genuinely hold >cap block rows) — replan distributed
-            pass
-
-    # ----- distributed planner: the same super-segment hierarchy in
-    # DataFrames.  Only ``phys`` (no query dimension) is materialized
-    # at per-block width; query-tagged tables exist only at sseg
-    # granularity and below surviving ssegs, so planner row counts
-    # scale with queries × surviving ssegs instead of queries ×
-    # segments (round 5 — the old per-(query, seg) materialization
-    # was the tier's scale ceiling).
-    phys = phys.coalesce(n_meta).localCheckpoint(eager=True)
-    qtb = F.broadcast(qt.select("query_id", "term", "n_terms"))
-
-    # Per (term, seg): best block bound — physical, query-free.
-    ts = (
-        phys.groupBy("term", "seg")
-        .agg(F.max("ub").alias("term_ub"))
-        .withColumn("sseg",
-                    (F.col("seg") / SUPERSEG_FACTOR).cast("long"))
-        .withColumn("term_ub_pos", F.greatest(F.col("term_ub"), F.lit(0.0)))
-        .withColumn("term_ub_neg", F.least(F.col("term_ub"), F.lit(0.0)))
-    )
-    ts = ts.localCheckpoint(eager=True)
-    # Per (term, sseg): best bound in the super-segment (≥ every
-    # member segment's term bound — monotone in max over segs).
-    ss = ts.groupBy("term", "sseg").agg(F.max("term_ub").alias("ss_ub"))
-
-    # Per (query, sseg): bounds + #query terms present.
-    #
-    # ``sum_pos = Σ_t max(0, ub_t)`` is the bound for a doc that may
-    # contain ANY subset of terms — but an empty subset is not a
-    # match.  A matching doc contains ≥1 query term t0, and t0's
-    # postings live in the doc's own segment, so
-    #     score ≤ max_{t0 present} [ub_t0 + Σ_{t'≠t0} max(0, ub_t')]
-    #           = sum_pos + max_t min(ub_t, 0)
-    # — strictly sharper when every term in the segment has negative
-    # ub (the unclamped-idf head-term regime, where the clamped bound
-    # degenerates to 0 and can never fall below a negative θ).  For
-    # conjunctive queries the doc contains ALL terms, so the plain
-    # unclamped sum ``Σ_t ub_t`` bounds it (sharper again).  The same
-    # derivation holds per super-segment over the per-term maxima,
-    # and presence at sseg level is implied by presence in any member
-    # segment — so an sseg bound < θ prunes every member segment
-    # without its per-segment bounds ever being computed.
-    sug = (
-        ss.join(qtb, "term")
-        .groupBy("query_id", "sseg")
-        .agg(
-            F.sum(F.greatest(F.col("ss_ub"), F.lit(0.0))).alias("sum_pos"),
-            F.sum("ss_ub").alias("sum_all"),
-            F.max(F.least(F.col("ss_ub"), F.lit(0.0))).alias("best_neg"),
-            F.count("*").alias("n_terms_present"),
-            F.first("n_terms").alias("n_terms"),
-        )
-        .withColumn(
-            "sseg_ub",
-            F.col("sum_all") if conjunctive
-            else F.col("sum_pos") + F.col("best_neg"),
-        )
-    )
-    if conjunctive:
-        # A conjunctive match needs every term; a super-segment whose
-        # segments never see some query term cannot match — the
-        # zigzag-intersection skip (QueryProcessor.cpp:589-634) at
-        # sseg granularity (repeated per-segment below).
-        sug = sug.filter(F.col("n_terms_present") == F.col("n_terms"))
-    sug = sug.localCheckpoint(eager=True)
-
-    def seg_bounds(qsseg: DataFrame) -> DataFrame:
-        """Per-(query, seg) bounds, expanded ONLY inside the given
-        (query_id, sseg) rows — same derivation as the sseg bound."""
-        rows = ts.join(
-            F.broadcast(qsseg.join(qtb, "query_id")), ["term", "sseg"])
-        su = (
-            rows.groupBy("query_id", "seg")
-            .agg(
-                F.sum("term_ub_pos").alias("sum_pos"),
-                F.sum("term_ub").alias("sum_all"),
-                F.max("term_ub_neg").alias("best_neg"),
-                F.count("*").alias("n_terms_present"),
-                F.first("n_terms").alias("n_terms"),
-            )
-            .withColumn(
-                "seg_ub",
-                F.col("sum_all") if conjunctive
-                else F.col("sum_pos") + F.col("best_neg"),
-            )
-        )
-        if conjunctive:
-            su = su.filter(F.col("n_terms_present") == F.col("n_terms"))
-        return su
-
-    # Seeds: the best seed_segs segments WITHIN each query's top
-    # seed_segs super-segments (bound-ordered).  Seed choice affects
-    # only θ quality, never correctness — phase 2 prunes against the
-    # real per-segment bounds regardless.
-    w_ss = Window.partitionBy("query_id").orderBy(
-        F.col("sseg_ub").desc(), F.col("sseg").asc())
-    top_ss = (
-        sug.withColumn("ss_rank", F.row_number().over(w_ss))
-        .filter(F.col("ss_rank") <= max(seed_segs, 1))
-        .select("query_id", "sseg")
-    )
-    w_seed = Window.partitionBy("query_id").orderBy(
-        F.col("seg_ub").desc(), F.col("seg").asc()
-    )
-    seeds = (
-        seg_bounds(top_ss)
-        .withColumn("seg_rank", F.row_number().over(w_seed))
-        .filter(F.col("seg_rank") <= seed_segs)
-        .select("query_id", "seg")
-    )
-
-    # Phase 1: exact top-k inside the seed segments → threshold θ.
-    # seed_topk is ≤ k rows per query and is used twice — to derive θ
-    # AND as the seed segments' contribution to the final result (seed
-    # segments are excluded from phase 2 below, so their blocks decode
-    # exactly once instead of twice).  Materialize it once; θ derives
-    # from the checkpoint for free.
-    seed_keys = phys.join(
-        F.broadcast(seeds.join(qtb.select("query_id", "term"),
-                               "query_id")),
-        ["term", "seg"],
-    ).select("query_id", "term", "seg", "block_id")
-    seed_topk = exact_scores(seed_keys).localCheckpoint(eager=True)
-    theta = seed_topk.filter(F.col("rank") == cfg.top_k).select(
-        "query_id", F.col("score").alias("theta")
-    )
-
-    # Phase 2: super-segments whose bound can still matter, expanded
-    # to segments, MINUS the seed segments (already scored exactly;
-    # their survivors ride in via the final union).  Queries with
-    # fewer than k seed results get θ = -inf (left-join null keeps
-    # all).  Segments inside pruned ssegs are dropped soundly:
-    # seg_ub ≤ sseg_ub < θ.
-    kept_ss = (
-        sug.join(theta, "query_id", "left")
-        .filter(F.col("theta").isNull()
-                | (F.col("sseg_ub") >= F.col("theta")))
-        .select("query_id", "sseg")
-    )
-    kept_segs = (
-        seg_bounds(kept_ss)
-        .join(theta, "query_id", "left")
-        .filter(F.col("theta").isNull() | (F.col("seg_ub") >= F.col("theta")))
-        .join(seeds, ["query_id", "seg"], "left_anti")
-        .select("query_id", "seg", "sum_pos")
-    )
-    survivors = (
-        phys.join(
-            F.broadcast(kept_segs.join(qtb.select("query_id", "term"),
-                                       "query_id")),
-            ["term", "seg"],
-        )
-        # block-level bound: the doc CONTAINS this term (ub accounts it
-        # exactly), the others stay optional → the CLAMPED sum_pos,
-        # not the sharpened seg_ub (which assumes the best single
-        # mandatory term and would under-bound docs holding this one)
-        .join(ts.select("term", "seg", "term_ub_pos"), ["term", "seg"])
-        .join(theta, "query_id", "left")
-        .filter(
-            F.col("theta").isNull()
-            # never block-prune negative-idf terms (df ≥ N/2): dropping
-            # a negative contribution would inflate partial scores
-            | (F.col("df") * 2 >= F.lit(total_docs))
-            | (F.col("ub") + F.col("sum_pos") - F.col("term_ub_pos")
-               >= F.col("theta"))
-        )
-        # cut_ub = θ − other-terms slack: the bound a CHUNK inside this
-        # surviving block must still clear — the decode kernel prunes
-        # chunks below it (null = no chunk pruning: no θ yet, or a
-        # negative-idf term, same rule as the block filter above)
-        .select(
-            "query_id", "term", "seg", "block_id",
-            F.when(
-                F.col("theta").isNull()
-                | (F.col("df") * 2 >= F.lit(total_docs)),
-                F.lit(None).cast("double"),
-            ).otherwise(
-                F.col("theta") - (F.col("sum_pos") - F.col("term_ub_pos"))
-            ).alias("cut_ub"),
-        )
-    )
-    if counters is not None or fallback is not None:
-        # Materialize the survivor set once: the abort check (and the
-        # bench counters) need its count, and the phase-2 decode below
-        # reuses the checkpoint instead of recomputing the planning
-        # DAG.  Bounded: query-tagged surviving block keys — at worst
-        # the exhaustive decode-set width phase 2 would process anyway.
-        survivors = survivors.localCheckpoint(eager=True)
-        n_seed = seed_keys.count()
-        n_surv = survivors.count() + n_seed
-    if counters is not None:
-        # bench-only accounting (extra actions): how many (query, term,
-        # block) rows the exhaustive plan would decode vs what was
-        # actually decoded (seed phase + phase-2 survivors)
-        counters["exhaustive_blocks"] = meta.count()
-        counters["seed_blocks"] = n_seed
-        counters["survivor_blocks"] = n_surv
-        # parity with the driver planner's collected-row accounting:
-        # the physical width its collect would have had
-        counters["planner_meta_rows"] = phys.count()
-    if fallback is not None:
-        # Adaptive abort, distributed-planner edition (the driver
-        # planner's check lives in _search_pruned_driver): this is the
-        # path a beyond-driver-cap corpus takes — including a lazy
-        # rollup plan that overflowed mid-fetch — so a non-pruning
-        # shape at exactly that scale must still hand the batch to the
-        # segmented fallback before the phase-2 decode.  The tagged
-        # exhaustive width comes arithmetically from per-term block
-        # counts over the checkpointed physical frame (one tiny agg +
-        # ≤|terms|-row collect, no second parquet scan); sunk cost is
-        # the probe, the plan stages, and the seed decode — same
-        # contract as the driver abort.
-        per_term = {r["term"]: int(r["n"]) for r in
-                    phys.groupBy("term").agg(F.count("*").alias("n"))
-                    .collect()}
-        tagged_total = sum(per_term.get(t, 0)
-                           for q in queries.values()
-                           for t in set(tokenizer.split_query(q, mode)))
-        if n_surv > PRUNED_ABORT_SURVIVOR_RATIO * max(tagged_total, 1):
-            if counters is not None:
-                counters["aborted_to_fallback"] = True
-            return fallback()
-
-    # Per-subset top-k then union then re-rank is exact: a doc ranked
-    # past k *within* the seed subset already has k better
-    # (score desc, doc_id asc) docs in that subset alone, so it can
-    # never enter the overall top-k; same for phase 2.  No doc appears
-    # in both subsets (its postings live in exactly one segment, and
-    # seed segments are anti-joined out of phase 2).
-    phase2 = exact_scores(survivors)
-    combined = seed_topk.select("query_id", "doc_id", "score").unionByName(
-        phase2.select("query_id", "doc_id", "score")
-    )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        combined.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= cfg.top_k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
-
-
-def _search_pruned_driver(
-    spark: SparkSession,
-    phys: DataFrame,
-    qt_pdf,
-    exact_scores,
-    exact_candidates,
-    stats: dict,
-    cfg: EngineConfig,
-    conjunctive: bool,
-    seed_segs: int,
-    counters: dict | None,
-    mpdf=None,
-    rollup_pdf=None,
-    fallback=None,
-) -> DataFrame:
-    """Driver-side planning half of :func:`search_pruned` — identical
-    bound/seed/θ/survivor math to the distributed planner, in pandas
-    over the collected (small) metadata.  Decode + scoring stay in
-    Spark (``exact_scores``), so the job count drops from ~6 actions
-    of metadata bookkeeping to exactly: one metadata collect, one
-    seed-decode job, one survivor-decode job.  The planner's exact
-    seed/survivor SEGMENT sets are pushed into both decode scans
-    (``scan_segs``) — reads, not just decode, stay proportional to
-    what survived.
-
-    Round 5: the collect is PHYSICAL (term, seg, block) rows — no
-    query dimension — and the per-query expansion runs through the
-    super-segment hierarchy, so both the collect width and the pandas
-    work scale with terms × segments and queries × SURVIVING ssegs
-    respectively, not queries × segments (the old planner's 497 k-row
-    collect at 32 M docs × 256 queries collapses to the same ~15 k
-    physical rows as an 8-query batch).  ``qt_pdf``: (query_id, term,
-    n_terms) pandas frame.  ``mpdf``: optionally the already-collected
-    physical metadata (the routing probe), so the gate costs no
-    second scan.
-
-    ``rollup_pdf`` (round 5 — the 64×-beyond-cap regime): the
-    (term, sseg, ss_ub, n_blocks) rollup instead of per-block rows;
-    the planner then LAZILY fetches per-segment/block metadata only
-    for each query's top super-segments and the θ-surviving ones —
-    super-segments are pruned against θ before their per-segment
-    metadata is ever read.  A fetch that outgrows the driver budget
-    raises :class:`_DriverPlanOverflow` (caller replans distributed).
-    """
-    import time as _time
-
-    import pandas as pd
-
-    total_docs = int(stats["total_docs"])
-    grouped_schema = ("term string, seg long, block_id int, "
-                      "query_ids array<string>")
-    empty = spark.createDataFrame(
-        [], "query_id string, doc_id long, score double, rank int")
-
-    lazy = mpdf is None and rollup_pdf is not None
-    _t0 = _time.time()
-    if mpdf is None and not lazy:
-        mpdf = phys.select("term", "seg", "block_id", "df", "ub").toPandas()
-        if counters is not None:
-            counters["_t_probe"] = _time.time() - _t0
-    qt = qt_pdf
-
-    def _ts_of(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = (pdf.groupby(["term", "seg"], as_index=False)
-              .agg(term_ub=("ub", "max")))
-        ts["term_ub_pos"] = ts["term_ub"].clip(lower=0.0)
-        ts["term_ub_neg"] = ts["term_ub"].clip(upper=0.0)
-        ts["sseg"] = ts["seg"] // SUPERSEG_FACTOR
-        return ts
-
-    _PHYS_COLS = ["term", "seg", "block_id", "df", "ub"]
-    if lazy:
-        # rollup mode: ss comes straight from the collected rollup;
-        # per-block metadata starts EMPTY and is fetched per sseg set
-        ss = rollup_pdf
-        mpdf = pd.DataFrame(
-            {c: pd.Series(dtype=("object" if c == "term" else
-                                 "float64" if c == "ub" else "int64"))
-             for c in _PHYS_COLS})
-        ts = _ts_of(mpdf)
-        have_ssegs: set[int] = set()
-
-        def ensure_ssegs(ssegs) -> None:
-            """Fetch physical rows for not-yet-loaded super-segments
-            (seg-range + sseg predicates pushed into the metadata
-            scan), appending to the accumulated mpdf/ts."""
-            nonlocal mpdf, ts
-            need = sorted({int(s) for s in ssegs} - have_ssegs)
-            if not need:
-                return
-            lo = need[0] * SUPERSEG_FACTOR
-            hi = (need[-1] + 1) * SUPERSEG_FACTOR
-            scan = phys.filter((F.col("seg") >= lo) & (F.col("seg") < hi))
-            if len(need) <= 4096:
-                scan = scan.filter(block_codec.sql_in(
-                    f"seg div {SUPERSEG_FACTOR}", need))
-            budget = PLAN_LOCAL_MAX_META_ROWS - len(mpdf)
-            if budget <= 0:
-                raise _DriverPlanOverflow()
-            t0 = _time.time()
-            new = (scan.select(*_PHYS_COLS)
-                   .limit(budget + 1).toPandas())
-            if counters is not None:
-                counters["_t_fetch"] = (counters.get("_t_fetch", 0.0)
-                                        + _time.time() - t0)
-            if len(new) > budget:
-                raise _DriverPlanOverflow()
-            if len(need) > 4096:  # range scan over-fetches: trim exact
-                new = new[(new["seg"] // SUPERSEG_FACTOR).isin(need)]
-            have_ssegs.update(need)
-            mpdf = (new if len(mpdf) == 0
-                    else pd.concat([mpdf, new], ignore_index=True))
-            ts = _ts_of(mpdf)
-            if counters is not None:
-                counters["planner_meta_rows"] = (len(rollup_pdf)
-                                                 + len(mpdf))
+    # ----- planner input: all physical rows on the driver, or the
+    # super-segment rollup with the rows left in Spark
+    factor = _superseg_factor(all_terms, dfs, total_docs, cfg)
+    mpdf = None
+    if driver_plan or driver_plan is None and _estimate_phys_rows(
+            all_terms, dfs, total_docs, cfg) <= PLAN_LOCAL_MAX_META_ROWS:
+        mpdf = phys.toPandas()
+    elif driver_plan is None:
+        # The estimate bounds CHUNK rows, so it exceeds the true
+        # block-row count by up to the chunks-per-block packing factor
+        # (~60-100× at 64 KB blocks / ~650 B chunks).  Probe with ONE
+        # bounded metadata-only collect (CollectLimit stops at MAX+1
+        # rows, so driver memory stays gated by the same constant):
+        # under the cap, the probe IS the planner's input.
+        probe = phys.limit(PLAN_LOCAL_MAX_META_ROWS + 1).toPandas()
+        if len(probe) <= PLAN_LOCAL_MAX_META_ROWS:
+            mpdf = probe
+    if mpdf is not None:
+        ts = _term_bounds(mpdf, factor)
+        ss = (ts.groupby(["term", "sseg"], as_index=False)
+              .agg(term_ub=("term_ub", "max"), n_blocks=("n_blocks", "sum")))
+        held = len(mpdf)
     else:
-        ts = _ts_of(mpdf)
+        sseg_phys = phys.withColumn("sseg", F.expr(f"seg div {factor}"))
+        ss = (sseg_phys.groupBy("term", "sseg")
+              .agg(F.max("ub").alias("term_ub"),
+                   F.count("*").alias("n_blocks")).toPandas())
+        held = len(ss)
 
-        def ensure_ssegs(ssegs) -> None:
-            return None
+    def in_spark(step, ssegs, schema: str) -> DataFrame:
+        """``step(blocks, ts)`` run once per super-segment in
+        ``ssegs``, in Spark, over that super-segment's block rows."""
+        names = [c.split()[0] for c in schema.split(", ")]
+        scan = _seg_scan(ssegs, factor)
+        rows = sseg_phys if scan is None else sseg_phys.filter(scan)
+        return rows.groupBy("sseg").applyInPandas(
+            lambda g: step(g, _term_bounds(g, factor))[names], schema)
 
-    # query-tagged width of the exhaustive decode set — arithmetic
-    # over per-term block counts (a head term shared by Q queries
-    # counts Q×), matching the distributed planner's meta.count();
-    # also the adaptive-abort denominator below
-    tagged_total = 0
-    if len(qt):
-        per_term = (ss.groupby("term")["n_blocks"].sum() if lazy
-                    else mpdf.groupby("term").size())
-        tagged_total = int(qt["term"].map(per_term).fillna(0).sum())
+    # per-(query, term) pairs: split_query dedupes, so a repeated term
+    # counts once here, in the bounds and in the abort denominator,
+    # exactly as the survivor keys count it
+    qt_rows = []
+    for qid, q in queries.items():
+        terms = tokenizer.split_query(q, mode)
+        qt_rows += [(qid, t, len(terms)) for t in terms]
+    qt_pdf = pd.DataFrame(qt_rows, columns=["query_id", "term", "n_terms"])
+    per_term = ss.groupby("term")["n_blocks"].sum()
+    tagged_total = int(qt_pdf["term"].map(per_term).fillna(0).sum())
     if counters is not None:
         counters["exhaustive_blocks"] = tagged_total
-        # what the planner actually collected (round-5 done-criterion:
-        # physical rows, invariant in batch width — the old planner
-        # collected the query-tagged count above).  Lazy mode adds
-        # fetched rows as they load (see the return paths).
-        counters["planner_meta_rows"] = (len(rollup_pdf) if lazy
-                                         else len(mpdf))
-    if (len(qt) == 0 or (len(mpdf) == 0 and not lazy)
-            or (lazy and len(ss) == 0)):
-        if counters is not None:
-            counters["seed_blocks"] = counters["survivor_blocks"] = 0
-        return empty
-
-    _t0 = _time.time()
-    # physical hierarchy — query-free: per-(term, seg) best block
-    # bound, rolled up to super-segments
-    if not lazy:
-        ss = ts.groupby(["term", "sseg"], as_index=False).agg(
-            ss_ub=("term_ub", "max"))
-    ss = ss.copy()
-    ss["ss_ub_pos"] = ss["ss_ub"].clip(lower=0.0)
-    ss["ss_ub_neg"] = ss["ss_ub"].clip(upper=0.0)
-
-    # per-(query, sseg) bound — the only full per-query expansion,
-    # SUPERSEG_FACTOR× narrower than per-segment (derivation: see the
-    # distributed planner)
-    qss = qt.merge(ss, on="term")
-    sug = (qss.groupby(["query_id", "sseg"], as_index=False)
-           .agg(sum_pos=("ss_ub_pos", "sum"), sum_all=("ss_ub", "sum"),
-                best_neg=("ss_ub_neg", "max"),
-                n_terms_present=("term", "count"),
-                n_terms=("n_terms", "first")))
-    sug["sseg_ub"] = (sug["sum_all"] if conjunctive
-                      else sug["sum_pos"] + sug["best_neg"])
-    if conjunctive:
-        sug = sug[sug["n_terms_present"] == sug["n_terms"]]
+        counters["planner_meta_rows"] = held
+    # per-(query, sseg) bounds — the only full per-query expansion,
+    # ``factor``× narrower than per-segment
+    sug = _bounds(qt_pdf.merge(ss, on="term"), "sseg", conjunctive)
     if len(sug) == 0:
         if counters is not None:
             counters["seed_blocks"] = counters["survivor_blocks"] = 0
-        return empty
+        return spark.createDataFrame(
+            [], "query_id string, doc_id long, score double, rank int")
 
-    def seg_bounds(qsseg: pd.DataFrame) -> pd.DataFrame:
-        """Per-(query, seg) bounds, expanded ONLY inside the given
-        (query_id, sseg) rows."""
-        rows = (qsseg.merge(qt, on="query_id")
-                .merge(ts, on=["term", "sseg"]))
-        su = (rows.groupby(["query_id", "seg"], as_index=False)
-              .agg(sum_pos=("term_ub_pos", "sum"),
-                   sum_all=("term_ub", "sum"),
-                   best_neg=("term_ub_neg", "max"),
-                   n_terms_present=("term", "count"),
-                   n_terms=("n_terms", "first")))
-        su["seg_ub"] = (su["sum_all"] if conjunctive
-                        else su["sum_pos"] + su["best_neg"])
-        if conjunctive:
-            su = su[su["n_terms_present"] == su["n_terms"]]
-        return su
+    # Seeds: the best seed_segs segments WITHIN each query's top
+    # seed_segs super-segments.  Seed choice affects only θ quality,
+    # never correctness — phase 2 prunes against the real bounds.
+    top_ss = _top(sug, "sseg", max(seed_segs, 1))
 
-    # seeds: best seed_segs segments within each query's top seed_segs
-    # super-segments (seed choice affects only θ quality, never
-    # correctness)
-    top_ss = (sug.sort_values(["query_id", "sseg_ub", "sseg"],
-                              ascending=[True, False, True])
-              .groupby("query_id").head(max(seed_segs, 1))
-              [["query_id", "sseg"]])
-    ensure_ssegs(top_ss["sseg"])
-    seeds = (seg_bounds(top_ss)
-             .sort_values(["query_id", "seg_ub", "seg"],
-                          ascending=[True, False, True])
-             .groupby("query_id").head(seed_segs)[["query_id", "seg"]])
-    seed_keys = (seeds.merge(qt[["query_id", "term"]], on="query_id")
-                 .merge(mpdf[["term", "seg", "block_id"]],
-                        on=["term", "seg"]))[
-        ["query_id", "term", "seg", "block_id"]].drop_duplicates()
+    def seed_step(b, ts_):
+        return _top(_seg_bounds(ts_, top_ss, qt_pdf, conjunctive), "seg",
+                    seed_segs)
 
-    # Phase 1: exact top-k of the seed segments → θ; reused below so
-    # seed blocks decode once.  With the fused kernel available, rank
-    # the (collect-sized) per-segment candidates here in pandas —
-    # skipping the Spark ranking window saves a shuffle stage in the
-    # seed job.
-    # pre-group per physical block in pandas (shared decode — see
-    # exact_candidates): one Spark row per (term, seg, block) with the
-    # query_ids array, zero extra Spark stages
-    seed_g = (seed_keys.groupby(["term", "seg", "block_id"],
-                                as_index=False)
-              .agg(query_ids=("query_id", list)))
-    if counters is not None:
-        counters["_t_plan_seed"] = _time.time() - _t0
-    _t0 = _time.time()
-    seed_df = spark.createDataFrame(seed_g, grouped_schema)
-    seed_seg_list = sorted(set(seed_keys["seg"].tolist()))
-    cand = exact_candidates(seed_df, seed_seg_list, n_keys=len(seed_g))
+    if mpdf is not None:
+        seeds = seed_step(mpdf, ts)
+    else:
+        seeds = _top(in_spark(seed_step, top_ss["sseg"], _SEED_SCHEMA)
+                     .toPandas(), "seg", seed_segs)
+    seeds = seeds[["query_id", "seg", "sum_pos", "n_blocks"]].assign(
+        theta=float("nan"))
+    n_seed = int(seeds["n_blocks"].sum())
+
+    def seed_keys_step(b, ts_):
+        return _block_keys(b, ts_, seeds, qt_pdf, total_docs)
+
+    # Phase 1: exact top-k of the seed segments → θ; the seed results
+    # are reused below, so seed blocks decode once.  The ranking of the
+    # (collect-sized) per-segment candidates runs here in pandas —
+    # skipping the Spark ranking window saves a shuffle stage.
+    if mpdf is not None:
+        seed_g = seed_keys_step(mpdf, ts).drop(columns="cut_ub")
+        seed_df = spark.createDataFrame(seed_g, _KEYS_SCHEMA)
+        n_seed_keys = len(seed_g)
+    else:
+        seed_df = in_spark(seed_keys_step, seeds["seg"] // factor,
+                           _KEYS_SCHEMA)
+        n_seed_keys = n_seed
+    seed_scan = _seg_scan(seeds["seg"])
+    cand = exact_candidates(seed_df, seed_scan, n_seed_keys)
     if cand is not None:
-        cpdf = cand.toPandas()
-        cpdf = cpdf.sort_values(["query_id", "score", "doc_id"],
-                                ascending=[True, False, True])
+        cpdf = cand.toPandas().sort_values(["query_id", "score", "doc_id"],
+                                           ascending=[True, False, True])
         cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
         seed_pdf = cpdf[cpdf["rank"] <= cfg.top_k]
     else:
-        seed_pdf = exact_scores(seed_df, seed_seg_list,
-                                n_keys=len(seed_g)).toPandas()
+        seed_pdf = exact_scores(seed_df, seed_scan, n_seed_keys).toPandas()
+    # θ lowered by a margin: a bound comes from Spark's arithmetic, and a
+    # sum of bounds adds in another order than the kernel adds a doc's
+    # contributions, so a segment or block whose best doc TIES θ can
+    # get a bound a few ULPs below it and be dropped with the tie.  The
+    # margin costs extra decode only, never a wrong skip (the chunk cut
+    # carries the same 1e-9, see query_exec.segment_topk_candidates).
     theta = (seed_pdf[seed_pdf["rank"] == cfg.top_k]
              [["query_id", "score"]].rename(columns={"score": "theta"}))
-    if counters is not None:
-        counters["_t_seed_job"] = _time.time() - _t0
-    _t0 = _time.time()
+    theta["theta"] -= 1e-9
 
-    # Phase 2: surviving super-segments → their segments (minus
-    # seeds) → surviving blocks.  Segments inside pruned ssegs drop
-    # without per-segment bounds ever being computed
+    # Phase 2: super-segments whose bound can still matter, expanded
+    # to segments MINUS the seed segments (already scored exactly),
+    # then to surviving blocks.  Queries with fewer than k seed results
+    # get θ = NaN and keep everything.  Segments inside pruned ssegs
+    # drop without per-segment bounds ever being computed
     # (seg_ub ≤ sseg_ub < θ).
     kept_ss = sug.merge(theta, on="query_id", how="left")
     kept_ss = kept_ss[kept_ss["theta"].isna()
-                      | (kept_ss["sseg_ub"] >= kept_ss["theta"])]
-    ensure_ssegs(kept_ss["sseg"])
-    kept = seg_bounds(kept_ss[["query_id", "sseg"]])
-    kept = kept.merge(theta, on="query_id", how="left")
-    kept = kept[kept["theta"].isna() | (kept["seg_ub"] >= kept["theta"])]
-    kept = kept.merge(seeds, on=["query_id", "seg"], how="left",
-                      indicator=True)
-    kept = kept[kept["_merge"] == "left_only"]
-    sv = (kept[["query_id", "seg", "sum_pos"]]
-          .merge(qt[["query_id", "term"]], on="query_id")
-          .merge(ts[["term", "seg", "term_ub_pos"]], on=["term", "seg"])
-          .merge(mpdf[["term", "seg", "block_id", "df", "ub"]],
-                 on=["term", "seg"])
-          .merge(theta, on="query_id", how="left"))
-    mask = (sv["theta"].isna()
-            | (sv["df"] * 2 >= total_docs)      # never prune negative idf
-            | (sv["ub"] + sv["sum_pos"] - sv["term_ub_pos"] >= sv["theta"]))
-    # chunk-level cut: same rule as the distributed planner (NaN =
-    # no chunk pruning — no θ, or negative-idf term)
-    sv["cut_ub"] = sv["theta"] - (sv["sum_pos"] - sv["term_ub_pos"])
-    sv.loc[sv["theta"].isna() | (sv["df"] * 2 >= total_docs),
-           "cut_ub"] = float("nan")
-    surv_keys = sv[mask][["query_id", "term", "seg", "block_id",
-                          "cut_ub"]].drop_duplicates(
-        subset=["query_id", "term", "seg", "block_id"])
+                      | (kept_ss["bound"] >= kept_ss["theta"])]
+
+    def survivor_step(b, ts_):
+        kept = (_seg_bounds(ts_, kept_ss, qt_pdf, conjunctive)
+                .merge(theta, on="query_id", how="left"))
+        kept = kept[kept["theta"].isna() | (kept["bound"] >= kept["theta"])]
+        kept = kept.merge(seeds[["query_id", "seg"]], on=["query_id", "seg"],
+                          how="left", indicator=True)
+        return _block_keys(b, ts_, kept[kept["_merge"] == "left_only"],
+                           qt_pdf, total_docs)
+
+    if mpdf is not None:
+        surv_g = survivor_step(mpdf, ts)
+        n_keys = len(surv_g)
+        n_surv = int(surv_g["query_ids"].map(len).sum())
+        surv_scan = _seg_scan(surv_g["seg"])
+        if n_keys:
+            surv_df = spark.createDataFrame(surv_g, _SURV_SCHEMA)
+    else:
+        # materialize once: the count and the phase-2 decode both read
+        # the checkpoint instead of re-running the planning groups
+        surv_df = in_spark(survivor_step, kept_ss["sseg"],
+                           _SURV_SCHEMA).localCheckpoint(eager=True)
+        n_keys, n_surv = surv_df.agg(
+            F.count("*"), F.coalesce(F.sum(F.size("query_ids")), F.lit(0))
+        ).first()
+        surv_scan = _seg_scan(kept_ss["sseg"], factor)
     if counters is not None:
-        counters["seed_blocks"] = len(seed_keys)
-        counters["survivor_blocks"] = len(surv_keys) + len(seed_keys)
-        counters["_t_plan_phase2"] = _time.time() - _t0
-    if (fallback is not None
-            and len(surv_keys) + len(seed_keys)
+        counters["seed_blocks"] = n_seed
+        counters["survivor_blocks"] = n_seed + n_surv
+    if (fallback is not None and n_seed + n_surv
             > PRUNED_ABORT_SURVIVOR_RATIO * max(tagged_total, 1)):
         # Adaptive abort (see PRUNED_ABORT_SURVIVOR_RATIO): θ prunes
         # almost nothing on this batch × corpus shape, so phase 2
         # would decode ≈ the exhaustive set WITH survivor bookkeeping
         # on top.  Hand the whole batch to the segmented exhaustive
         # kernel instead — sunk cost is only the metadata probe, the
-        # pandas plan, and the tiny seed decode.  Rank identity is
-        # unaffected (the fallback is a rank-identical tier).
+        # plan, and the tiny seed decode.  Rank identity is unaffected
+        # (the fallback is a rank-identical tier).
         if counters is not None:
             counters["aborted_to_fallback"] = True
         return fallback()
 
-    seed_scores = spark.createDataFrame(
+    # Per-subset top-k then union then re-rank is exact: a doc ranked
+    # past k *within* the seed subset already has k better
+    # (score desc, doc_id asc) docs in that subset alone, so it can
+    # never enter the overall top-k; same for phase 2.  No doc appears
+    # in both subsets (its postings live in exactly one segment, and
+    # seed segments are excluded from phase 2).
+    combined = spark.createDataFrame(
         seed_pdf[["query_id", "doc_id", "score"]],
         "query_id string, doc_id long, score double")
-    if len(surv_keys) == 0:
-        combined = seed_scores
-    else:
-        # grouped like the seed keys; merged cut_ub = min, reset to
-        # NaN when any query has no cut (NaN) so that query's chunks
-        # are never pruned from the shared block — vectorised group
-        # min + any-NaN mask, no Python call per group
-        surv_g = (surv_keys.assign(no_cut=surv_keys["cut_ub"].isna())
-                  .groupby(["term", "seg", "block_id"], as_index=False)
-                  .agg(query_ids=("query_id", list),
-                       cut_ub=("cut_ub", "min"), no_cut=("no_cut", "any")))
-        surv_g.loc[surv_g.pop("no_cut"), "cut_ub"] = float("nan")
-        phase2 = exact_scores(
-            spark.createDataFrame(surv_g, grouped_schema + ", cut_ub double"),
-            sorted(set(surv_keys["seg"].tolist())), n_keys=len(surv_g))
-        combined = seed_scores.unionByName(
-            phase2.select("query_id", "doc_id", "score"))
-    # per-subset top-k ∪ re-rank is exact — see search_pruned
+    if n_keys:
+        combined = combined.unionByName(
+            exact_scores(surv_df, surv_scan, n_keys)
+            .select("query_id", "doc_id", "score"))
     w_final = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -1075,12 +707,3 @@ def _search_pruned_driver(
         .filter(F.col("rank") <= cfg.top_k)
         .select("query_id", "doc_id", "score", "rank")
     )
-
-
-def count_blocks(spark: SparkSession, index_path: str,
-                 queries: dict[str, str], lexicon: DataFrame,
-                 cfg: EngineConfig = DEFAULT) -> int:
-    """Block rows the exhaustive path would decode (pruning-ratio
-    metrics for bench)."""
-    meta, _, _, _ = _query_meta(spark, index_path, lexicon, queries, cfg)
-    return meta.count()

@@ -261,3 +261,30 @@ def test_sql_in_builds_in_one_call():
         bc.sql_in("term", terms)
         best = min(best, time.perf_counter() - t0)
     assert best <= 0.005, best
+
+
+@pytest.mark.parametrize("driver_plan", [None, False])
+def test_pruned_counters_add_no_jobs(spark, built, tmp_path, driver_plan):
+    # counters= is accounting only: a forced-pruned search launches the
+    # same Spark jobs with and without it, whether the planner runs on
+    # the driver or per super-segment in Spark
+    import numpy as np
+
+    from cs6913_web_search_engines_spark.operators import pruning
+
+    postings, doc_stats, stats, lexicon = built
+    cfg = EngineConfig(segment_docs=64, n_term_shards=4)
+    path = str(tmp_path / "index")
+    bc.write_index(bc.encode_index(postings, cfg), path)
+    lk = spark.sparkContext.broadcast(np.ones(1 << 12, dtype=np.int32))
+    qs = {"q0": "data fast", "q1": "join data", "q2": "spark"}
+
+    def jobs(**kw):
+        return checks.spark_jobs(spark, lambda: pruning.search_pruned(
+            spark, path, lexicon, doc_stats, stats, qs, cfg, len_lookup=lk,
+            driver_plan=driver_plan, **kw).collect())
+
+    jobs()                                         # warm-up
+    counters: dict = {}
+    assert jobs(counters=counters) == jobs()
+    assert counters["survivor_blocks"] > 0

@@ -14,6 +14,7 @@ from cs6913_web_search_engines_spark.operators import (
     pruning,
     query_exec as qe,
 )
+from tests.oracle import OracleIndex
 
 QUERIES = {
     "q1": "data fast join",
@@ -84,10 +85,13 @@ def _norms_broadcast(spark, doc_stats):
 @pytest.mark.parametrize("driver_plan", [True, False])
 def test_pruned_planners_rank_identity(spark, compressed, driver_plan,
                                        conjunctive):
-    """The driver planner (pandas bounds/θ/survivors + fused kernel)
-    and the distributed planner must both be rank-identical to the
-    exhaustive path AND agree exactly on pruning accounting — the two
-    planners implement the same bound math."""
+    """The planner run on the driver (collected metadata) and run in
+    Spark (rollup on the driver, per-super-segment expansion through
+    applyInPandas) must both be rank-identical to the exhaustive path
+    AND agree exactly on pruning accounting — both paths call the same
+    bound math.  Only ``planner_meta_rows`` differs by design: the
+    driver path holds the physical rows, the Spark path the smaller
+    (term, sseg) rollup."""
     path, cfg, postings, doc_stats, stats, lexicon = compressed
     norms = _norms_broadcast(spark, doc_stats)
     counters: dict = {}
@@ -109,8 +113,12 @@ def test_pruned_planners_rank_identity(spark, compressed, driver_plan,
     )
     # underscore keys are lazy accumulator handles (populated only
     # after an action), not planner accounting
-    strip = lambda d: {k: v for k, v in d.items() if not k.startswith("_")}
+    strip = lambda d: {k: v for k, v in d.items()
+                       if not k.startswith("_") and k != "planner_meta_rows"}
     assert strip(counters) == strip(other)
+    held = {driver_plan: counters["planner_meta_rows"],
+            not driver_plan: other["planner_meta_rows"]}
+    assert 0 < held[False] < held[True]
 
 
 def test_pruning_actually_prunes_on_selective_terms(spark, tmp_path):
@@ -449,133 +457,237 @@ def test_route_memo_keyed_by_seed_segs(spark, tmp_path, monkeypatch):
     assert planned == [2, 8]               # other seed_segs: planned
 
 
-def test_rollup_probed_driver_planner(spark, tmp_path, monkeypatch):
-    """Round-5 beyond-cap regime: when physical metadata outgrows the
-    driver cap but the (term, sseg) ROLLUP fits, the driver planner
-    plans hierarchically from the rollup and fetches per-segment
-    metadata ONLY for top + θ-surviving super-segments — identical
-    results and pruning accounting to the full-collect planner.  When
-    even a lazy fetch outgrows the budget, the planner must overflow
-    cleanly into the distributed replan (same results)."""
-    rows = []
-    for d in range(2048):
-        words = ["common", "filler"]
-        if d < 64:
-            words += ["rare"] * 8
-        rows.append((d, " ".join(words)))
+def _build(spark, path, rows, cfg):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = EngineConfig(segment_docs=64, n_term_shards=4, top_k=10)
     postings = ib.build_postings(docs)
     doc_stats = ib.build_doc_stats(docs, postings)
     stats = ib.corpus_stats(doc_stats)
     lexicon = ib.build_lexicon(postings)
-    path = str(tmp_path / "ridx")
     bc.write_index(bc.encode_index(postings, cfg), path)
-    norms = _norms_broadcast(spark, doc_stats)
+    return path, doc_stats, stats, lexicon, _norms_broadcast(spark, doc_stats)
+
+
+@pytest.fixture(scope="module")
+def rare_index(spark, tmp_path_factory):
+    """32 segments of 64 docs: 'rare' concentrated (tf 8) in segment 0,
+    'common' and 'filler' in every doc — a prunable shape."""
+    rows = [(d, " ".join(["common", "filler"] + (["rare"] * 8 if d < 64
+                                                  else [])))
+            for d in range(2048)]
+    cfg = EngineConfig(segment_docs=64, n_term_shards=4, top_k=10)
+    path = str(tmp_path_factory.mktemp("rare") / "index")
+    return (cfg, *_build(spark, path, rows, cfg))
+
+
+@pytest.fixture(scope="module")
+def uniform_index(spark, tmp_path_factory):
+    """Every doc 'alpha beta gamma': all segment bounds tie, so θ
+    prunes nothing — the non-pruning shape the abort exists for."""
+    rows = [(d, "alpha beta gamma") for d in range(2048)]
+    cfg = EngineConfig(segment_docs=64, n_term_shards=4, top_k=10)
+    path = str(tmp_path_factory.mktemp("uniform") / "index")
+    return (cfg, *_build(spark, path, rows, cfg))
+
+
+def _accounting(counters):
+    return {k: v for k, v in counters.items()
+            if not k.startswith("_") and k != "planner_meta_rows"}
+
+
+def test_rollup_probed_driver_planner(spark, rare_index, monkeypatch):
+    """Big path: when the physical metadata outgrows the driver cap,
+    the bounded probe overflows and the driver holds only the
+    (term, sseg) rollup; the seed bounds and survivor keys inside the
+    chosen super-segments come from the same pandas functions, run per
+    super-segment in Spark.  Identical results and pruning accounting
+    to the driver path, with fewer rows held on the driver."""
+    cfg, path, doc_stats, stats, lexicon, norms = rare_index
     queries = {"q1": "rare common", "q2": "rare"}
-
-    ref_counters: dict = {}
-    want = pruning.search_pruned(
-        spark, path, lexicon, doc_stats, stats, queries, cfg,
-        seed_segs=1, len_lookup=norms, driver_plan=True,
-        counters=ref_counters,
-    ).collect()
-
-    # 8 segs per sseg → 4 ssegs over the 32 segments; cap between the
-    # rollup size and the physical row count forces rollup mode
+    # 8 segs per sseg → 4 ssegs over the 32 segments
     monkeypatch.setattr(pruning, "SUPERSEG_FACTOR", 8)
-    nphys = int(ref_counters["planner_meta_rows"])
+
+    def run(**kw):
+        counters: dict = {}
+        rows = pruning.search_pruned(
+            spark, path, lexicon, doc_stats, stats, queries, cfg,
+            seed_segs=1, len_lookup=norms, counters=counters, **kw,
+        ).collect()
+        return _canon(rows), counters
+
+    want, ref = run(driver_plan=True)
+    nphys = int(ref["planner_meta_rows"])
     monkeypatch.setattr(pruning, "PLAN_LOCAL_MAX_META_ROWS", nphys - 1)
-    lazy_counters: dict = {}
-    got = pruning.search_pruned(
-        spark, path, lexicon, doc_stats, stats, queries, cfg,
-        seed_segs=1, len_lookup=norms, counters=lazy_counters,
-    ).collect()
-    assert _canon(got) == _canon(want)
-    # rollup mode engaged: fewer rows collected than physical, and
-    # super-segments were pruned before their metadata was fetched
-    assert lazy_counters["planner_meta_rows"] < nphys
-    assert lazy_counters["exhaustive_blocks"] == ref_counters[
-        "exhaustive_blocks"]
-    assert lazy_counters["survivor_blocks"] <= ref_counters[
-        "exhaustive_blocks"] // 2
-    assert "_t_rollup" in lazy_counters
-
-    # overflow: budget below even the top-sseg fetch → clean
-    # distributed replan, same results
-    monkeypatch.setattr(pruning, "PLAN_LOCAL_MAX_META_ROWS", 6)
-    got2 = pruning.search_pruned(
-        spark, path, lexicon, doc_stats, stats, queries, cfg,
-        seed_segs=1, len_lookup=norms,
-    ).collect()
-    assert _canon(got2) == _canon(want)
+    got, big = run()
+    assert got == want
+    # the rollup: 'rare' in sseg 0 only, 'common' in all 4
+    assert big["planner_meta_rows"] == 5 < nphys
+    assert _accounting(big) == _accounting(ref)
+    # super-segments were pruned before their blocks were expanded
+    assert big["survivor_blocks"] <= ref["exhaustive_blocks"] // 2
 
 
-def test_distributed_planner_abort(spark, tmp_path, monkeypatch):
-    """Round-5: the adaptive abort must also fire on the DISTRIBUTED
-    planner — the path a beyond-driver-cap corpus takes (including a
-    lazy rollup plan that overflowed mid-fetch), so a non-pruning
-    shape at exactly that scale still hands the batch to the
-    segmented fallback before the phase-2 decode.  Same shapes as the
-    driver-planner abort test, with the driver cap forced to 0 so
-    planning goes distributed; the prunable shape must NOT abort."""
-    rows = [(d, "alpha beta gamma") for d in range(2048)]  # uniform
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    cfg = EngineConfig(segment_docs=64, n_term_shards=4, top_k=10)
-    postings = ib.build_postings(docs)
-    doc_stats = ib.build_doc_stats(docs, postings)
-    stats = ib.corpus_stats(doc_stats)
-    lexicon = ib.build_lexicon(postings)
-    path = str(tmp_path / "didx")
-    bc.write_index(bc.encode_index(postings, cfg), path)
-    norms = _norms_broadcast(spark, doc_stats)
+def test_distributed_planner_abort(spark, uniform_index, rare_index,
+                                   monkeypatch):
+    """The adaptive abort on the Spark path — the path a
+    beyond-driver-cap corpus takes — so a non-pruning shape at exactly
+    that scale still hands the batch to the segmented fallback before
+    the phase-2 decode.  Same shapes as the driver-path abort test,
+    with the driver cap forced to 0 so planning runs in Spark; the
+    prunable shape must NOT abort."""
     monkeypatch.setattr(pruning, "PLAN_LOCAL_MAX_META_ROWS", 0)
-
+    cfg, path, doc_stats, stats, lexicon, norms = uniform_index
+    q = {"q": "alpha beta"}
     calls = []
 
     def fallback():
         calls.append(1)
         return qe.search_compressed(
-            spark, path, lexicon, doc_stats, stats, {"q": "alpha beta"},
-            cfg)
+            spark, path, lexicon, doc_stats, stats, q, cfg)
 
     counters: dict = {}
     got = pruning.search_pruned(
-        spark, path, lexicon, doc_stats, stats, {"q": "alpha beta"}, cfg,
+        spark, path, lexicon, doc_stats, stats, q, cfg,
         len_lookup=norms, counters=counters, fallback=fallback,
     ).collect()
     assert calls == [1] and counters.get("aborted_to_fallback")
+    # planned in Spark: the driver held only the rollup (2 terms × 1 sseg)
+    assert counters["planner_meta_rows"] == 2
     want = qe.search_compressed(
-        spark, path, lexicon, doc_stats, stats, {"q": "alpha beta"}, cfg,
-    ).collect()
+        spark, path, lexicon, doc_stats, stats, q, cfg).collect()
     assert _canon(got) == _canon(want)
 
-    # prunable shape through the same forced-distributed planner: no
-    # abort, pruning accounting intact, rank identity holds
-    rows2 = []
-    for d in range(2048):
-        words = ["common", "filler"]
-        if d < 64:
-            words += ["rare"] * 8
-        rows2.append((d, " ".join(words)))
-    docs2 = spark.createDataFrame(rows2, "doc_id long, text string")
-    postings2 = ib.build_postings(docs2)
-    doc_stats2 = ib.build_doc_stats(docs2, postings2)
-    stats2 = ib.corpus_stats(doc_stats2)
-    lexicon2 = ib.build_lexicon(postings2)
-    path2 = str(tmp_path / "didx2")
-    bc.write_index(bc.encode_index(postings2, cfg), path2)
-    norms2 = _norms_broadcast(spark, doc_stats2)
-    calls.clear()
+    # prunable shape through the same Spark path: no abort, pruning
+    # accounting intact, rank identity holds
+    cfg, path, doc_stats, stats, lexicon, norms = rare_index
+    q = {"q": "rare common"}
     counters2: dict = {}
     got2 = pruning.search_pruned(
-        spark, path2, lexicon2, doc_stats2, stats2, {"q": "rare common"},
-        cfg, len_lookup=norms2, seed_segs=1, counters=counters2,
+        spark, path, lexicon, doc_stats, stats, q, cfg,
+        len_lookup=norms, seed_segs=1, counters=counters2,
         fallback=lambda: (_ for _ in ()).throw(AssertionError("aborted")),
     ).collect()
-    assert calls == [] and not counters2.get("aborted_to_fallback")
+    assert not counters2.get("aborted_to_fallback")
     assert counters2["survivor_blocks"] < counters2["exhaustive_blocks"] // 2
     want2 = qe.search_compressed(
-        spark, path2, lexicon2, doc_stats2, stats2, {"q": "rare common"},
-        cfg).collect()
+        spark, path, lexicon, doc_stats, stats, q, cfg).collect()
     assert _canon(got2) == _canon(want2)
+
+
+@pytest.mark.parametrize("driver_plan", [None, False])
+def test_planner_rows_within_cap(spark, rare_index, monkeypatch,
+                                 driver_plan):
+    """The driver never holds more metadata rows than
+    ``PLAN_LOCAL_MAX_META_ROWS``: the driver path only takes rows the
+    probe proved to fit, and the Spark path holds the rollup, whose
+    super-segment factor is derived to keep it under the cap."""
+    cfg, path, doc_stats, stats, lexicon, norms = rare_index
+    queries = {"q1": "rare common", "q2": "rare", "q3": "common filler"}
+    monkeypatch.setattr(pruning, "SUPERSEG_FACTOR", 8)
+    ref: dict = {}
+    want = _canon(pruning.search_pruned(
+        spark, path, lexicon, doc_stats, stats, queries, cfg,
+        len_lookup=norms, driver_plan=True, counters=ref).collect())
+    nphys = int(ref["planner_meta_rows"])
+    for cap in (nphys, nphys - 1):
+        monkeypatch.setattr(pruning, "PLAN_LOCAL_MAX_META_ROWS", cap)
+        counters: dict = {}
+        got = pruning.search_pruned(
+            spark, path, lexicon, doc_stats, stats, queries, cfg,
+            len_lookup=norms, driver_plan=driver_plan,
+            counters=counters).collect()
+        assert _canon(got) == want
+        assert counters["planner_meta_rows"] <= cap, (cap, counters)
+
+
+@pytest.mark.parametrize("shape,aborts", [("uniform", True),
+                                          ("rare", False)])
+def test_repeated_term_abort_parity(spark, uniform_index, rare_index,
+                                    shape, aborts):
+    """A repeated query term counts once — in the bounds, the survivor
+    keys and the abort denominator alike — so the driver path and the
+    Spark path make the same abort decision with the same counters,
+    equal to those of the deduplicated query."""
+    cfg, path, doc_stats, stats, lexicon, norms = (
+        uniform_index if shape == "uniform" else rare_index)
+    dup, plain = (("alpha alpha beta", "alpha beta") if shape == "uniform"
+                  else ("rare rare common", "rare common"))
+    want = _canon(qe.search_compressed(
+        spark, path, lexicon, doc_stats, stats, {"q": plain}, cfg).collect())
+    seen = []
+    for query, driver_plan in ((dup, True), (dup, False), (plain, True)):
+        calls = []
+
+        def fallback():
+            calls.append(1)
+            return qe.search_compressed(
+                spark, path, lexicon, doc_stats, stats, {"q": plain}, cfg)
+
+        counters: dict = {}
+        got = pruning.search_pruned(
+            spark, path, lexicon, doc_stats, stats, {"q": query}, cfg,
+            len_lookup=norms, seed_segs=1, counters=counters,
+            driver_plan=driver_plan, fallback=fallback).collect()
+        assert _canon(got) == want
+        assert calls == ([1] if aborts else [])
+        seen.append(_accounting(counters))
+    assert seen[0] == seen[1] == seen[2]
+    assert bool(seen[0].get("aborted_to_fallback")) is aborts
+
+
+def test_superseg_factor_coarsens_under_cap(spark, rare_index, monkeypatch):
+    """With the cap below the rollup bound at the default factor, the
+    factor doubles until Σ_t min(df_t, ⌈n_segs / factor⌉) fits, and
+    both paths stay rank-identical and agree on accounting."""
+    cfg, path, doc_stats, stats, lexicon, norms = rare_index
+    monkeypatch.setattr(pruning, "SUPERSEG_FACTOR", 8)
+    terms = ["rare", "common", "filler"]
+    dfs = {"rare": 64, "common": 2048, "filler": 2048}
+    n = int(stats["total_docs"])
+
+    def factor(cap):
+        monkeypatch.setattr(pruning, "PLAN_LOCAL_MAX_META_ROWS", cap)
+        return pruning._superseg_factor(terms, dfs, n, cfg)
+
+    # 32 segments: 4 ssegs at 8 → 12 rows, 2 at 16 → 6, 1 at 32 → 3
+    assert [factor(c) for c in (12, 11, 6, 5, 3, 0)] == [8, 16, 16, 32,
+                                                         32, 32]
+    queries = {"q1": "rare common", "q2": "common filler"}
+    want = _canon(qe.search_compressed(
+        spark, path, lexicon, doc_stats, stats, queries, cfg).collect())
+    factor(3)
+    seen = []
+    for driver_plan in (True, False):
+        counters: dict = {}
+        got = pruning.search_pruned(
+            spark, path, lexicon, doc_stats, stats, queries, cfg,
+            len_lookup=norms, seed_segs=1, counters=counters,
+            driver_plan=driver_plan).collect()
+        assert _canon(got) == want
+        seen.append(counters)
+    assert _accounting(seen[0]) == _accounting(seen[1])
+    assert seen[1]["planner_meta_rows"] <= 3
+
+
+@pytest.mark.parametrize("driver_plan,norms_in_ram", [(True, True),
+                                                      (False, False)])
+def test_bound_tying_theta_keeps_segment(spark, tmp_path, driver_plan,
+                                         norms_in_ram):
+    """A segment whose best doc TIES θ must survive although its bound,
+    computed in another float order than the doc's score, lands an ULP
+    below θ on this corpus.  Seed segment 2 ('x x x', 'x x') sets θ to
+    the 'x x' score; segment 0's 'x x' doc ties it and ranks first by
+    doc id, so dropping segment 0 returns doc 131 at rank 2."""
+    x_docs = {1: "x x", 130: "x x x", 131: "x x", 200: "x x"}
+    rows = [(d, x_docs.get(d, "a b c")) for d in range(256)]
+    cfg = EngineConfig(segment_docs=64, n_term_shards=2, top_k=2)
+    path, doc_stats, stats, lexicon, norms = _build(
+        spark, str(tmp_path / "index"), rows, cfg)
+    got = pruning.search_pruned(
+        spark, path, lexicon, doc_stats, stats, {"q": "x"}, cfg,
+        seed_segs=1, len_lookup=norms if norms_in_ram else None,
+        driver_plan=driver_plan).collect()
+    got = [(r["doc_id"], r["score"]) for r in sorted(got,
+                                                     key=lambda r: r["rank"])]
+    want = OracleIndex(rows).search("x", 2)
+    assert [d for d, _ in got] == [d for d, _ in want] == [130, 1]
+    assert all(abs(g - w) <= 1e-9 for (_, g), (_, w) in zip(got, want))
