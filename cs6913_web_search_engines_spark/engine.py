@@ -297,8 +297,7 @@ class QueryEngine:
             # once PER QUERY — the distinct-term sum undercounts a
             # batch sharing one head term by the batch-size factor and
             # would route exactly the pruned tier's target regime to
-            # the exhaustive kernel (same per-occurrence-vs-distinct
-            # trap as pruning._estimate_meta_rows)
+            # the exhaustive kernel
             total = sum(dfs.get(t, 0)
                         for q in queries.values()
                         for t in tokenizer.split_query(q, mode))

@@ -34,6 +34,8 @@ from collections.abc import Iterable, Iterator
 
 import pandas as pd
 
+from cs6913_web_search_engines_spark.session import trim_zip_importers
+
 # The separator literal from IndexBuilder.cpp:58-59, re-expressed as
 # data (same characters, therefore the same UTF-8 byte set).
 _DOC_SEP_CHARS = (
@@ -120,6 +122,7 @@ def postings_batches(
     token occurrence — this is the map-side combine the reference gets
     from its per-doc `std::map` (IndexBuilder.cpp:62-110).
     """
+    trim_zip_importers()
     for pdf in batches:
         doc_ids: list[int] = []
         terms: list[str] = []
@@ -136,6 +139,7 @@ def postings_batches(
              "term": pd.Series(terms, dtype="object"),
              "tf": pd.Series(tfs, dtype="int32")}
         )
+    trim_zip_importers()
 
 
 POSTINGS_SCHEMA = "doc_id long, term string, tf int"

@@ -27,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from cs6913_web_search_engines_spark.session import trim_zip_importers
+
 KINDS = ("image", "audio", "video")
 MIMES = {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}
 FRAME_BYTES = 64  # synthetic bytes-per-frame for n_frames derivation
@@ -96,6 +98,7 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     arithmetic is expressible in the DuckDB oracle over the source
     text, which pins the kernel's correctness.
     """
+    trim_zip_importers()
     for pdf in batches:
         n = len(pdf)
         if n == 0:
@@ -126,6 +129,7 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # canonicalizer (scalar columns only)
             "nib_hist": [",".join(map(str, h)) for h in hist.tolist()],
         })
+    trim_zip_importers()
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -253,6 +257,7 @@ def decode_media(media: DataFrame, video_decoder=None) -> DataFrame:
     codec-present branch be tested in codec-free environments."""
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_zip_importers()
         import io
         import wave
 
@@ -303,6 +308,7 @@ def decode_media(media: DataFrame, video_decoder=None) -> DataFrame:
             for c in ("width", "height", "n_samples", "n_channels"):
                 out[c] = out[c].astype("Int32")
             yield out
+        trim_zip_importers()
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         _decode, DECODED_SCHEMA

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
 from cs6913_web_search_engines_spark.functions import tokenizer
 from cs6913_web_search_engines_spark.operators import block_codec, query_exec
+from cs6913_web_search_engines_spark.session import trim_zip_importers
 
 # Up to this many PHYSICAL (term, seg, block) metadata rows the
 # planner runs on the driver over the collected rows, leaving Spark
@@ -109,37 +110,15 @@ _SEED_SCHEMA = ("query_id string, seg long, sum_pos double, bound double, "
                 "n_blocks long")
 
 
-def _estimate_meta_rows(queries: dict[str, str], dfs: dict[str, int],
-                        total_docs: int, cfg: EngineConfig,
-                        mode: str) -> int:
-    """Sound upper bound on the QUERY-TAGGED metadata row count
-    # (query_id, term, seg, block_id) — the decode-set width used for
-    kernel partition sizing and the auto-tier gate.
-
-    Per (query, term) occurrence — NOT per distinct term: a head term
-    shared by Q queries appears Q× in meta.  Per occurrence the term's
-    block rows are Σ_seg ceil(df_seg / chunk) ≤ ceil(df / chunk) +
-    #nonempty segs ≤ ceil(df/chunk) + min(df, n_segs): each nonempty
-    segment adds at most one partial block (a term spread one posting
-    per segment has ~n_segs block rows even though df/chunk ≈ 0 —
-    the regime the old Σ_t df_t//chunk estimate missed by up to
-    chunk×batch_size)."""
-    chunk = cfg.postings_per_chunk
-    n_segs = max(1, -(-total_docs // cfg.segment_docs))
-    total = 0
-    for q in queries.values():
-        for t in set(tokenizer.split_query(q, mode)):
-            df = dfs.get(t, 0)
-            total += min(df, n_segs) + -(-df // chunk)
-    return max(1, total)
-
-
 def _estimate_phys_rows(terms, dfs: dict[str, int], total_docs: int,
                         cfg: EngineConfig) -> int:
     """Sound upper bound on the PHYSICAL (term, seg, block_id) row
     count — what the driver planner actually collects (per DISTINCT
-    term: physical metadata carries no query dimension).  Same
-    per-term bound as ``_estimate_meta_rows``."""
+    term: physical metadata carries no query dimension).  Per term the
+    block rows are Σ_seg ceil(df_seg / chunk) ≤ ceil(df / chunk) +
+    #nonempty segs ≤ ceil(df/chunk) + min(df, n_segs): each nonempty
+    segment adds at most one partial block (a term spread one posting
+    per segment has ~n_segs block rows even though df/chunk ≈ 0)."""
     chunk = cfg.postings_per_chunk
     n_segs = max(1, -(-total_docs // cfg.segment_docs))
     total = 0
@@ -198,7 +177,9 @@ def _query_meta(
     blocks: DataFrame | None = None,
     dfs: dict[str, int] | None = None,
 ):
-    """Block metadata rows for all query terms, with df attached.
+    """(qt, all_terms, phys): the per-(query, term) frame with df
+    attached, the sorted query terms, and the PHYSICAL block metadata
+    rows of those terms (no query dimension).
 
     Reads ONLY metadata columns — the parquet scan never touches the
     ``doc_gaps``/``tfs`` payload bytes (column pruning), and shard/term
@@ -225,7 +206,7 @@ def _query_meta(
         qt = query_exec.queries_to_terms(spark, queries, mode)
         qt = qt.join(lexicon.select("term", "df"), "term", "left").fillna(
             0, subset=["df"])
-    return phys.join(F.broadcast(qt), "term"), qt, all_terms, phys
+    return qt, all_terms, phys
 
 
 # ---------------------------------------------------------------------
@@ -408,11 +389,11 @@ def search_pruned(
     min_len = int(stats.get("min_len", 1))
     max_len = int(stats.get("max_len", 1 << 30))
     src = blocks if blocks is not None else spark.read.parquet(index_path)
-    _, qt, all_terms, meta_phys = _query_meta(
+    qt, all_terms, meta_phys = _query_meta(
         spark, index_path, lexicon, queries, cfg, src, dfs=dfs)
     if dfs is None:
         # probe term dfs once driver-side (qt carries the lexicon df):
-        # kernel idf inputs + the sizing estimates below
+        # kernel idf inputs + the planner-size estimates below
         dfs = {r["term"]: int(r["df"]) for r in
                qt.select("term", "df").distinct().collect()}
     # The decode scans must carry the term predicate too: the survivor
@@ -435,14 +416,6 @@ def search_pruned(
             .withColumn("ub", block_upper_bound(
                 cfg, total_docs, float(stats["avg_len"]), min_len, max_len))
             .select(*_PHYS_COLS))
-    # Kernel partitions sized from the df probe: ``_estimate_meta_rows``
-    # bounds every decode set below, so tiny batches run few-task
-    # stages (explicit repartition counts are NOT AQE-coalesced) while
-    # head-term batches at large corpora still fan out.
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
-    est_rows = _estimate_meta_rows(queries, dfs, total_docs, cfg, mode)
-    kernel_parts = max(8, min(spark.sparkContext.defaultParallelism * 2,
-                              est_rows // 2_000 + 1))
 
     chunk_accs = None
     if counters is not None:
@@ -455,8 +428,8 @@ def search_pruned(
         # query results or planning
         counters["_chunk_accs"] = chunk_accs
 
-    def exact_candidates(keys: DataFrame, scan: Column | None = None,
-                         n_keys: int = 0) -> DataFrame | None:
+    def exact_candidates(keys: DataFrame,
+                         scan: Column | None = None) -> DataFrame | None:
         """Fused decode+score+per-segment-top-k over exactly the given
         grouped (term, seg, block_id, query_ids[, cut_ub]) keys →
         per-segment candidate rows (query_id, doc_id, score),
@@ -474,9 +447,7 @@ def search_pruned(
         without it both decode jobs re-read every query-term block's
         payload bytes.  The fused build writes seg-range-clustered
         files per shard, so the seg predicate prunes at file/row-group
-        granularity.  ``n_keys`` (physical blocks, or an upper bound)
-        sizes the kernel at ~8 compressed blocks (≤512 KB payload) per
-        task: a ~100-block seed decode schedules ~12 tasks, not 64."""
+        granularity."""
         if len_lookup is None:
             return None
         if broadcast_keys:
@@ -486,19 +457,18 @@ def search_pruned(
         return query_exec.segment_topk_candidates(
             spark, kept, lexicon, stats, queries, cfg,
             len_lookup=len_lookup, conjunctive=conjunctive, dfs=dfs,
-            num_partitions=max(8, min(kernel_parts, -(-n_keys // 8))),
             chunk_counters=chunk_accs,
         )
 
-    def exact_scores(keys: DataFrame, scan: Column | None = None,
-                     n_keys: int = 0) -> DataFrame:
+    def exact_scores(keys: DataFrame,
+                     scan: Column | None = None) -> DataFrame:
         """Ranked exact top-k over the given grouped block keys.
 
         With norms in RAM this is ONE fused Arrow crossing
         (``exact_candidates``) plus a tiny global ranking window.
         Beyond norms-in-RAM scale it falls back to the distributed
         doc_stats-join scorer."""
-        cand = exact_candidates(keys, scan, n_keys)
+        cand = exact_candidates(keys, scan)
         if cand is not None:
             w = Window.partitionBy("query_id").orderBy(
                 F.col("score").desc(), F.col("doc_id").asc()
@@ -558,12 +528,17 @@ def search_pruned(
         names = [c.split()[0] for c in schema.split(", ")]
         scan = _seg_scan(ssegs, factor)
         rows = sseg_phys if scan is None else sseg_phys.filter(scan)
-        return rows.groupBy("sseg").applyInPandas(
-            lambda g: step(g, _term_bounds(g, factor))[names], schema)
+
+        def group(g: pd.DataFrame) -> pd.DataFrame:
+            trim_zip_importers()
+            return step(g, _term_bounds(g, factor))[names]
+
+        return rows.groupBy("sseg").applyInPandas(group, schema)
 
     # per-(query, term) pairs: split_query dedupes, so a repeated term
     # counts once here, in the bounds and in the abort denominator,
     # exactly as the survivor keys count it
+    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
     qt_rows = []
     for qid, q in queries.items():
         terms = tokenizer.split_query(q, mode)
@@ -611,20 +586,18 @@ def search_pruned(
     if mpdf is not None:
         seed_g = seed_keys_step(mpdf, ts).drop(columns="cut_ub")
         seed_df = spark.createDataFrame(seed_g, _KEYS_SCHEMA)
-        n_seed_keys = len(seed_g)
     else:
         seed_df = in_spark(seed_keys_step, seeds["seg"] // factor,
                            _KEYS_SCHEMA)
-        n_seed_keys = n_seed
     seed_scan = _seg_scan(seeds["seg"])
-    cand = exact_candidates(seed_df, seed_scan, n_seed_keys)
+    cand = exact_candidates(seed_df, seed_scan)
     if cand is not None:
         cpdf = cand.toPandas().sort_values(["query_id", "score", "doc_id"],
                                            ascending=[True, False, True])
         cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
         seed_pdf = cpdf[cpdf["rank"] <= cfg.top_k]
     else:
-        seed_pdf = exact_scores(seed_df, seed_scan, n_seed_keys).toPandas()
+        seed_pdf = exact_scores(seed_df, seed_scan).toPandas()
     # θ lowered by a margin: a bound comes from Spark's arithmetic, and a
     # sum of bounds adds in another order than the kernel adds a doc's
     # contributions, so a segment or block whose best doc TIES θ can
@@ -697,7 +670,7 @@ def search_pruned(
         "query_id string, doc_id long, score double")
     if n_keys:
         combined = combined.unionByName(
-            exact_scores(surv_df, surv_scan, n_keys)
+            exact_scores(surv_df, surv_scan)
             .select("query_id", "doc_id", "score"))
     w_final = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()

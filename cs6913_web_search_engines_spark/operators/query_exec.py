@@ -34,6 +34,7 @@ from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
 from cs6913_web_search_engines_spark.functions import tokenizer
 from cs6913_web_search_engines_spark.functions.bm25 import bm25_score
 from cs6913_web_search_engines_spark.operators import block_codec
+from cs6913_web_search_engines_spark.session import trim_zip_importers
 
 
 def exact_topk_numpy(cat: "np.ndarray", weights: "np.ndarray",
@@ -357,6 +358,7 @@ def segment_topk_candidates(
     nt_b = sc.broadcast(n_terms_by_q)
 
     def kernel(batches):
+        trim_zip_importers()
         lens = len_lookup.value
         t2q, idfs, nts = t2q_b.value, idf_b.value, nt_b.value
         # per-segment top-k rows accumulate as numpy slices (no
@@ -493,6 +495,7 @@ def segment_topk_candidates(
                         acc.setdefault(qid, []).append((ids, contrib))
         flush()
         yield drain()
+        trim_zip_importers()
 
     nparts = num_partitions or max(sc.defaultParallelism * 2, 8)
     cols = (["query_ids"] if multi else

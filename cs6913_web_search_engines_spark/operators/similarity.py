@@ -40,6 +40,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from cs6913_web_search_engines_spark.session import trim_zip_importers
+
 #: Above this many centroids the literal-expression path is replaced
 #: by a broadcast numpy matrix inside an Arrow kernel: the literal
 #: path string-interpolates every centroid component into the SQL
@@ -298,6 +300,7 @@ def _with_cells_kernel(
     k = nprobe
 
     def kernel(batches):
+        trim_zip_importers()
         ids, matn = bc.value
         for pdf in batches:
             if len(pdf) == 0:
@@ -320,6 +323,7 @@ def _with_cells_kernel(
                 order = np.argsort(-sims, axis=1, kind="stable")[:, :k]
                 pdf = pdf.assign(probe_ids=[list(ids[row]) for row in order])
             yield pdf
+        trim_zip_importers()
 
     return embeddings.mapInPandas(kernel, schema)
 

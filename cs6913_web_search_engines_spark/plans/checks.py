@@ -8,7 +8,9 @@ tests can pin the plan shape we designed for:
 * small dimension joins broadcast (``BroadcastHashJoin``);
 * scans prune columns (``ReadSchema`` contains only what's selected);
 * scoring stays inside WholeStageCodegen (no Python in the hot path);
-* an action launches only the Spark jobs it needs (``spark_jobs``).
+* an action launches only the Spark jobs it needs (``spark_jobs``);
+* a Python worker holds no cached ``zipimporter`` after an engine
+  kernel ran in it (``worker_zip_importers``).
 """
 
 from __future__ import annotations
@@ -79,3 +81,39 @@ def spark_jobs(spark: SparkSession, action) -> int:
     # job-start events reach the status store asynchronously
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def worker_zip_importers(spark: SparkSession, slots: int,
+                         before=None) -> list[tuple[int, int, float]]:
+    """Probe the Python workers with a ``slots``-task ``mapInPandas``
+    job (the worker pool the engine's kernels run in).  Each task runs
+    ``before()`` first when given (e.g. an engine kernel over a small
+    batch: same task, so the same worker process), then reports
+    ``(pid, n, ms)``: the pid, the number of ``zipimporter`` values in
+    ``sys.path_importer_cache``, and the milliseconds one
+    ``importlib.invalidate_caches()`` takes — the call PySpark makes at
+    the start of every task (see ``session.trim_zip_importers``)."""
+
+    def probe(batches):
+        import importlib
+        import os
+        import sys
+        import time
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        if before is not None:
+            before()
+        n = sum(isinstance(f, zipimport.zipimporter)
+                for f in sys.path_importer_cache.values())
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1e3
+        yield pd.DataFrame({"pid": [os.getpid()], "n": [n], "ms": [ms]})
+
+    rows = (spark.range(0, slots, 1, slots)
+            .mapInPandas(probe, "pid long, n long, ms double").collect())
+    return [(r["pid"], r["n"], r["ms"]) for r in rows]

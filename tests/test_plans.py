@@ -1,13 +1,16 @@
 """Plan-shape tests: pruning, pushdown, broadcast — the properties
 that make the design survive a 100x scale-up (SURVEY §4)."""
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import EngineConfig
+from cs6913_web_search_engines_spark.functions import tokenizer
 from cs6913_web_search_engines_spark.operators import (
     block_codec as bc,
     index_build as ib,
+    multimodal as mm,
     query_exec as qe,
 )
 from cs6913_web_search_engines_spark.plans import checks
@@ -288,3 +291,77 @@ def test_pruned_counters_add_no_jobs(spark, built, tmp_path, driver_plan):
     counters: dict = {}
     assert jobs(counters=counters) == jobs()
     assert counters["survivor_blocks"] > 0
+
+
+def _kernel_cases() -> dict:
+    """Module-level engine kernels with a one-batch input each."""
+    cfg = EngineConfig()
+    docs = pd.DataFrame({"doc_id": [0, 1, 2],
+                         "text": ["alpha beta", "beta gamma gamma", None]})
+    postings = pd.concat(tokenizer.postings_batches(iter([docs])))
+    postings = (postings.assign(seg=postings["doc_id"] // cfg.segment_docs)
+                .sort_values(["term", "seg", "doc_id"]))
+    blocks = pd.concat(bc._encode_stream(cfg)(iter([postings])))
+    media = pd.DataFrame({"media_id": [0, 1], "kind": ["image", "audio"],
+                          "payload": [b"\x00\x10\xff", b"abc"]})
+    return {
+        "tokenize": (tokenizer.postings_batches, docs),
+        "fused": (bc._fused_stream(cfg), docs),
+        "encode": (bc._encode_stream(cfg), postings),
+        "decode": (bc._decode_stream(cfg), blocks),
+        "features": (mm._feature_batches, media),
+    }
+
+
+@pytest.mark.parametrize("name", ["tokenize", "fused", "encode", "decode",
+                                  "features"])
+def test_kernel_leaves_no_zip_importer(spark, name):
+    # PySpark calls importlib.invalidate_caches() at the start of every
+    # task, and on Python 3.11 each cached zipimporter then re-reads
+    # its archive (16 of them, ~0.2 s per task).  An engine kernel
+    # trims them, so the next task in the same worker pays nothing.
+    # Kernel and probe run in one task: the same worker, every time.
+    kernel, pdf = _kernel_cases()[name]
+    slots = spark.sparkContext.defaultParallelism
+    rows = checks.worker_zip_importers(
+        spark, slots, before=lambda: [None for _ in kernel(iter([pdf]))])
+    assert len(rows) == slots
+    for pid, n, ms in rows:
+        assert n == 0, (name, pid, n, ms)
+        assert ms < 20, (name, pid, n, ms)
+
+
+def test_zip_importer_trim_keeps_imports_working(spark):
+    # idempotent, and a pyspark submodule no engine code imports still
+    # loads from the zip afterwards; no module is unloaded
+    def task(batches):
+        import sys
+
+        import pyspark
+
+        from cs6913_web_search_engines_spark.session import (
+            trim_zip_importers,
+        )
+
+        for _ in batches:
+            pass
+        trim_zip_importers()
+        trim_zip_importers()
+        had = set(sys.modules)
+        fresh = "pyspark.ml.linalg" not in had
+        import pyspark.ml.linalg as linalg
+
+        yield pd.DataFrame({
+            "fresh": [fresh],
+            "same_archive": [(".zip" in linalg.__file__)
+                             == (".zip" in pyspark.__file__)],
+            "has_vectors": [hasattr(linalg, "DenseVector")],
+            "lost": [len(had - set(sys.modules))],
+        })
+
+    row = (spark.range(0, 1, 1, 1)
+           .mapInPandas(task, "fresh boolean, same_archive boolean, "
+                              "has_vectors boolean, lost long")
+           .first())
+    assert row["fresh"] and row["same_archive"] and row["has_vectors"]
+    assert row["lost"] == 0
