@@ -58,6 +58,13 @@ class EngineConfig:
     # reference heap leaves ties unspecified; we define score DESC,
     # doc_id ASC everywhere.
 
+    @property
+    def query_mode(self) -> str:
+        """Query separator table (derived, not a knob): HW2 queries keep
+        ``_`` intact (QueryProcessor.cpp:88), HW3 splits on it
+        (ranking_optimizer/src/QueryProcessor.cpp:116) — SURVEY §2.11."""
+        return "hw2" if self.length_norm == "hw2" else "hw3"
+
     def hw2(self) -> "EngineConfig":
         return replace(self, length_norm="hw2", top_k=15)
 

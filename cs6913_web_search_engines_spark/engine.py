@@ -9,14 +9,22 @@ preload (``main.cpp:99-108`` pins lexicon + page table in RAM,
   re-listing);
 * when the page table fits in RAM (the reference's own regime), the
   doc-length column is collected into a dense int32 array and
-  broadcast — the decode kernel then attaches ``doc_len`` inline and
+  broadcast — the decode kernels then attach ``doc_len`` inline and
   the scorer needs NO doc_stats join at query time.  Beyond that
   (10^12 docs) the engine falls back to the shuffle join, same as
   ``broadcast_doc_stats`` auto-disabling.
 
-Queries then run either through the exhaustive compressed path or the
-block-max pruned fast path (operators/pruning.py), both
-rank-identical.
+``search`` routes each batch to one of four rank-identical tiers:
+
+* **driver-local** — collect-sized candidate volume: the candidate
+  blocks are collected and scored with numpy on the driver;
+* **segmented** — the distributed segment kernel
+  (``query_exec.search_segmented``);
+* **pruned** — the block-max pruned path (``operators/pruning.py``),
+  for large candidate volumes; it aborts back to the segmented tier
+  when the plan would prune too little;
+* **exhaustive compressed** — ``query_exec.search_compressed``, the
+  only tier that needs no norms array.
 """
 
 from __future__ import annotations
@@ -25,7 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
-from cs6913_web_search_engines_spark.functions import tokenizer, varbyte
+from cs6913_web_search_engines_spark.functions import tokenizer
 from cs6913_web_search_engines_spark.sources.fsutil import FsShim
 from cs6913_web_search_engines_spark.operators import (
     block_codec, pruning, query_exec,
@@ -93,6 +101,8 @@ PRUNED_MIN_TOTAL_CANDIDATES = 100_000_000
 # the memo clears wholesale (same policy as the postings cache).
 DF_MEMO_MAX_TERMS = 1_000_000
 
+_NO_IDS, _NO_SCORES = np.empty(0, np.int64), np.empty(0, np.float64)
+
 
 class QueryEngine:
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -147,11 +157,11 @@ class QueryEngine:
         if norms_in_ram:
             self.len_lookup = self._build_len_lookup()
         # Hot-term caches (immutable index → safe): per-term df memo
-        # and a bounded decoded-posting-list cache — the engine-level
-        # analog of the reference's mmap/OS page cache keeping hot
-        # lists resident (QueryProcessor.cpp:110-169).
+        # and a bounded cache of scored posting lists — the
+        # engine-level analog of the reference's mmap/OS page cache
+        # keeping hot lists resident (QueryProcessor.cpp:110-169).
         self._df_memo: dict[str, int] = {}
-        self._postings_cache: dict[str, list] = {}
+        self._postings_cache: dict[str, tuple] = {}
         self._postings_cache_n = 0
         # Adaptive-routing memo: when an auto-routed pruned batch
         # ABORTS (non-pruning shape — pruning.PRUNED_ABORT_*), the
@@ -173,10 +183,14 @@ class QueryEngine:
     def _search_local(self, queries: dict[str, str], dfs: dict[str, int],
                       conjunctive: bool, mode: str) -> DataFrame:
         """Driver-local exact top-k: one JVM-only job collects the
-        candidate block rows; VarByte decode + BM25 + top-k run in
-        numpy against the resident norms array.  Rank-identical to the
-        distributed path (same formula, same tie-break); used only
-        when the candidate volume is collect-sized."""
+        candidate block rows of the terms not cached yet, and
+        ``query_exec.score_blocks`` decodes and scores them in one
+        numpy pass against the resident norms array.  The cache holds
+        each term's SCORED postings, concatenated (doc_ids, contribs):
+        the index is immutable and the dfs memoised, so a repeated term
+        skips decode and BM25.  Rank-identical to the distributed path
+        (same scorer, same top-k); used only when the candidate volume
+        is collect-sized."""
         all_terms = sorted({t for q in queries.values()
                             for t in tokenizer.split_query(q, mode)})
         missing = [t for t in all_terms if t not in self._postings_cache]
@@ -185,7 +199,7 @@ class QueryEngine:
             # Evict BEFORE deciding what to fetch: clearing the cache
             # invalidates this query's previously-cached terms too, so
             # the whole term set must be (re-)fetched — otherwise the
-            # per_term build below KeyErrors on evicted terms.
+            # per-query lookup below KeyErrors on evicted terms.
             self._postings_cache.clear()
             self._postings_cache_n = 0
             missing = list(all_terms)
@@ -197,50 +211,29 @@ class QueryEngine:
                 .select("term", "n_postings", "doc_gaps", "tfs")
                 .collect()
             )
-            chunk = self.cfg.postings_per_chunk
-            for t in missing:           # negative entries too: a term
-                self._postings_cache.setdefault(t, [])  # absent from
-            self._postings_cache_n += fetched           # the index
-            n = np.array([r["n_postings"] for r in rows], dtype=np.int64)
-            ids, tfs = varbyte.decode_blocks(
-                n, [r["doc_gaps"] for r in rows], [r["tfs"] for r in rows],
-                chunk)
-            cut = np.cumsum(n)[:-1]
-            for r, i, f in zip(rows, np.split(ids, cut), np.split(tfs, cut)):
-                self._postings_cache[r["term"]].append((i, f))
-        per_term = {t: self._postings_cache[t]
-                    for t in all_terms if self._postings_cache[t]}
-        lens = self.len_lookup.value
-        n_docs = float(self.stats["total_docs"])
-        avg = float(self.stats["avg_len"])
-        k1, b = self.cfg.k1, self.cfg.b
+            scored = query_exec.score_blocks(
+                [r["n_postings"] for r in rows], [r["doc_gaps"] for r in rows],
+                [r["tfs"] for r in rows],
+                query_exec.bm25_idf([dfs.get(r["term"], 0) for r in rows],
+                                    self.stats["total_docs"]),
+                self.len_lookup.value, float(self.stats["avg_len"]), self.cfg)
+            # negative entries too: a term absent from the index
+            per_term: dict[str, list] = {t: [] for t in missing}
+            for r, pair in zip(rows, scored):
+                per_term[r["term"]].append(pair)
+            for t, pairs in per_term.items():
+                self._postings_cache[t] = (
+                    np.concatenate([p[0] for p in pairs] + [_NO_IDS]),
+                    np.concatenate([p[1] for p in pairs] + [_NO_SCORES]))
+            self._postings_cache_n += fetched
         out = []
         for qid in sorted(queries):
             terms = tokenizer.split_query(queries[qid], mode)
-            ids_all, contrib_all = [], []
-            for t in terms:
-                if t not in per_term:
-                    continue
-                ids = np.concatenate([x[0] for x in per_term[t]])
-                tfs = np.concatenate([x[1] for x in per_term[t]]).astype(np.float64)
-                df = float(dfs.get(t, 0))
-                idf = np.log((n_docs - df + 0.5) / (df + 0.5))
-                dl = np.zeros(ids.size, dtype=np.float64)
-                m = ids < lens.size
-                dl[m] = lens[ids[m]]
-                # dl == 0 ⇒ id missing from the norms array; dropping
-                # matches the distributed tier's inner doc_stats join
-                # (a zero length would minimize K and inflate scores)
-                ok = dl > 0
-                if not ok.all():
-                    ids, tfs, dl = ids[ok], tfs[ok], dl[ok]
-                K = k1 * ((1.0 - b) + b * dl / avg)
-                ids_all.append(ids)
-                contrib_all.append(idf * (k1 + 1.0) * tfs / (K + tfs))
-            if not ids_all:
+            if not terms:
                 continue
             uids, scores = query_exec.exact_topk_numpy(
-                np.concatenate(ids_all), np.concatenate(contrib_all),
+                np.concatenate([self._postings_cache[t][0] for t in terms]),
+                np.concatenate([self._postings_cache[t][1] for t in terms]),
                 len(terms), conjunctive, self.cfg.top_k)
             for rank in range(uids.size):
                 out.append((qid, int(uids[rank]), float(scores[rank]),
@@ -270,7 +263,7 @@ class QueryEngine:
         (QueryProcessor.cpp:578-582) — doubles as the qt builder, so
         the scorer job carries no lexicon join.
         """
-        mode = "hw2" if self.cfg.length_norm == "hw2" else "hw3"
+        mode = self.cfg.query_mode
         terms = sorted({t for q in queries.values()
                         for t in tokenizer.split_query(q, mode)})
         unknown = [t for t in terms if t not in self._df_memo]

@@ -52,7 +52,7 @@ exhaustive path on both paths — pinned by tests/test_pruning.py.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
@@ -189,7 +189,7 @@ def _query_meta(
     different separator set than HW3) so the pruned tier stays
     rank-identical to the other tiers under either config.
     """
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
+    mode = cfg.query_mode
     all_terms = sorted({t for q in queries.values()
                         for t in tokenizer.split_query(q, mode)})
     meta_cols = ["shard", "term", "seg", "block_id", "n_postings", "max_tf"]
@@ -429,18 +429,18 @@ def search_pruned(
         counters["_chunk_accs"] = chunk_accs
 
     def exact_candidates(keys: DataFrame,
-                         scan: Column | None = None) -> DataFrame | None:
-        """Fused decode+score+per-segment-top-k over exactly the given
-        grouped (term, seg, block_id, query_ids[, cut_ub]) keys →
-        per-segment candidate rows (query_id, doc_id, score),
-        pre-global-ranking.  Blocks are tagged with their queries
-        *before* decode so a block kept for query A never leaks
-        partial scores into query B (which may have pruned it); one
-        row per physical block ships and decodes ONE payload copy for
-        all of them.  ``cut_ub`` enables chunk-level skipping inside
-        the kernel — see query_exec.segment_topk_candidates.  None
-        when norms aren't in RAM (the kernel needs the resident length
-        array).
+                         scan: Column | None = None) -> DataFrame:
+        """Exact (query_id, doc_id, score) candidates over exactly the
+        given grouped (term, seg, block_id, query_ids[, cut_ub]) keys,
+        left for the caller to rank: with norms in RAM, each segment's
+        top-k per query from ONE fused Arrow crossing
+        (query_exec.segment_topk_candidates); beyond norms-in-RAM
+        scale, each query's top-k from the distributed doc_stats-join
+        scorer.  Blocks are tagged with their queries *before* decode
+        so a block kept for query A never leaks partial scores into
+        query B (which may have pruned it); one row per physical block
+        ships and decodes ONE payload copy for all of them.
+        ``cut_ub`` enables chunk-level skipping inside the kernel.
 
         ``scan``: the planner's segment predicate, pushed INTO the
         parquet scan — the join alone prunes nothing at read time, so
@@ -449,49 +449,25 @@ def search_pruned(
         files per shard, so the seg predicate prunes at file/row-group
         granularity."""
         if len_lookup is None:
-            return None
+            keys = keys.select(F.explode("query_ids").alias("query_id"),
+                               "term", "seg", "block_id")
         if broadcast_keys:
             keys = F.broadcast(keys)
         kept = (src if scan is None else src.filter(scan)).join(
             keys, ["term", "seg", "block_id"])
-        return query_exec.segment_topk_candidates(
-            spark, kept, lexicon, stats, queries, cfg,
-            len_lookup=len_lookup, conjunctive=conjunctive, dfs=dfs,
-            chunk_counters=chunk_accs,
-        )
-
-    def exact_scores(keys: DataFrame,
-                     scan: Column | None = None) -> DataFrame:
-        """Ranked exact top-k over the given grouped block keys.
-
-        With norms in RAM this is ONE fused Arrow crossing
-        (``exact_candidates``) plus a tiny global ranking window.
-        Beyond norms-in-RAM scale it falls back to the distributed
-        doc_stats-join scorer."""
-        cand = exact_candidates(keys, scan)
-        if cand is not None:
-            w = Window.partitionBy("query_id").orderBy(
-                F.col("score").desc(), F.col("doc_id").asc()
+        if len_lookup is not None:
+            return query_exec.segment_topk_candidates(
+                spark, kept, lexicon, stats, queries, cfg,
+                len_lookup=len_lookup, conjunctive=conjunctive, dfs=dfs,
+                chunk_counters=chunk_accs,
             )
-            return (
-                cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= cfg.top_k)
-                .select("query_id", "doc_id", "score", "rank")
-            )
-        keys = keys.select(F.explode("query_ids").alias("query_id"),
-                           "term", "seg", "block_id")
-        if broadcast_keys:
-            keys = F.broadcast(keys)
-        kept = (src if scan is None else src.filter(scan)).join(
-            keys, ["term", "seg", "block_id"])
-        postings = block_codec.decode_postings(
-            kept, cfg, extra_cols=("query_id",), len_lookup=len_lookup
-        )
+        postings = block_codec.decode_postings(kept, cfg,
+                                               extra_cols=("query_id",))
         return query_exec.score_query_set(
             postings, qt, lexicon, doc_stats, stats, cfg,
             conjunctive=conjunctive,
             broadcast_doc_stats=broadcast_doc_stats,
-        )
+        ).select("query_id", "doc_id", "score")
 
     # ----- planner input: all physical rows on the driver, or the
     # super-segment rollup with the rows left in Spark
@@ -538,10 +514,9 @@ def search_pruned(
     # per-(query, term) pairs: split_query dedupes, so a repeated term
     # counts once here, in the bounds and in the abort denominator,
     # exactly as the survivor keys count it
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
     qt_rows = []
     for qid, q in queries.items():
-        terms = tokenizer.split_query(q, mode)
+        terms = tokenizer.split_query(q, cfg.query_mode)
         qt_rows += [(qid, t, len(terms)) for t in terms]
     qt_pdf = pd.DataFrame(qt_rows, columns=["query_id", "term", "n_terms"])
     per_term = ss.groupby("term")["n_blocks"].sum()
@@ -581,23 +556,19 @@ def search_pruned(
 
     # Phase 1: exact top-k of the seed segments → θ; the seed results
     # are reused below, so seed blocks decode once.  The ranking of the
-    # (collect-sized) per-segment candidates runs here in pandas —
-    # skipping the Spark ranking window saves a shuffle stage.
+    # (collect-sized) candidates runs here in pandas — skipping the
+    # Spark ranking window saves a shuffle stage.
     if mpdf is not None:
         seed_g = seed_keys_step(mpdf, ts).drop(columns="cut_ub")
         seed_df = spark.createDataFrame(seed_g, _KEYS_SCHEMA)
     else:
         seed_df = in_spark(seed_keys_step, seeds["seg"] // factor,
                            _KEYS_SCHEMA)
-    seed_scan = _seg_scan(seeds["seg"])
-    cand = exact_candidates(seed_df, seed_scan)
-    if cand is not None:
-        cpdf = cand.toPandas().sort_values(["query_id", "score", "doc_id"],
-                                           ascending=[True, False, True])
-        cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
-        seed_pdf = cpdf[cpdf["rank"] <= cfg.top_k]
-    else:
-        seed_pdf = exact_scores(seed_df, seed_scan).toPandas()
+    cpdf = (exact_candidates(seed_df, _seg_scan(seeds["seg"])).toPandas()
+            .sort_values(["query_id", "score", "doc_id"],
+                         ascending=[True, False, True]))
+    cpdf["rank"] = cpdf.groupby("query_id").cumcount() + 1
+    seed_pdf = cpdf[cpdf["rank"] <= cfg.top_k]
     # θ lowered by a margin: a bound comes from Spark's arithmetic, and a
     # sum of bounds adds in another order than the kernel adds a doc's
     # contributions, so a segment or block whose best doc TIES θ can
@@ -659,24 +630,16 @@ def search_pruned(
             counters["aborted_to_fallback"] = True
         return fallback()
 
-    # Per-subset top-k then union then re-rank is exact: a doc ranked
-    # past k *within* the seed subset already has k better
-    # (score desc, doc_id asc) docs in that subset alone, so it can
-    # never enter the overall top-k; same for phase 2.  No doc appears
-    # in both subsets (its postings live in exactly one segment, and
-    # seed segments are excluded from phase 2).
+    # Per-subset top-k then union then ONE ranking is exact (the
+    # TakeOrdered argument): a doc ranked past k *within* a seed or
+    # phase-2 segment already has k better (score desc, doc_id asc)
+    # docs in that segment alone, so it can never enter the overall
+    # top-k.  No doc appears in both subsets (its postings live in
+    # exactly one segment, and seed segments are excluded from phase 2).
     combined = spark.createDataFrame(
         seed_pdf[["query_id", "doc_id", "score"]],
         "query_id string, doc_id long, score double")
     if n_keys:
         combined = combined.unionByName(
-            exact_scores(surv_df, surv_scan)
-            .select("query_id", "doc_id", "score"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        combined.withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= cfg.top_k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+            exact_candidates(surv_df, surv_scan))
+    return query_exec.rank_top_k(combined, cfg.top_k)

@@ -12,13 +12,19 @@ Spark-first restatement of the reference query core
   :477-487) becomes irrelevant;
 * top-k heap (QueryProcessor.cpp:273-319) → per-query ranking window
   ``row_number() <= k`` with the deterministic tie-break
-  ``score DESC, doc_id ASC`` (SURVEY §2.12.4);
+  ``score DESC, doc_id ASC`` (SURVEY §2.12.4), built once in
+  :func:`rank_top_k` for every tier;
 * batch query sets run as ONE job: queries-as-DataFrame broadcast
   joined against the postings, replacing the reference's
   socket-per-query loop (5.77 s/query, HW3 PDF §4.1).
 
-The scorer is a pure Column expression (JVM codegen); Python appears
-only in the decode UDF when reading the compressed index.
+Two scorers, one formula.  Over the logical postings (and the decoded
+output of the compressed index) BM25 is a pure Column expression (JVM
+codegen, ``functions/bm25.py``).  Over compressed block rows it is
+numpy: :func:`score_blocks` decodes and scores many rows in one pass
+with the idf of :func:`bm25_idf`, and :func:`exact_topk_numpy` ranks
+them — shared by the segment kernel (one pass per segment's rows in
+each Arrow batch) and the engine's driver-local tier.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cs6913_web_search_engines_spark.config import DEFAULT, EngineConfig
-from cs6913_web_search_engines_spark.functions import tokenizer
+from cs6913_web_search_engines_spark.functions import tokenizer, varbyte
 from cs6913_web_search_engines_spark.functions.bm25 import bm25_score
 from cs6913_web_search_engines_spark.operators import block_codec
 from cs6913_web_search_engines_spark.session import trim_zip_importers
@@ -43,9 +49,10 @@ def exact_topk_numpy(cat: "np.ndarray", weights: "np.ndarray",
     (doc_id, contribution) arrays: sum per doc, conjunctive = doc
     matched every query term, order by (score desc, doc_id asc), cut
     at k.  ONE implementation shared by the driver-local tier
-    (engine._search_local) and the segment kernel — a tie-break or
-    conjunctive fix applied to one copy but not the other would break
-    the cross-tier rank-identity the tests pin."""
+    (engine._search_local, over its cached scored postings) and the
+    segment kernel (over one segment's :func:`score_blocks` slices) — a
+    tie-break or conjunctive fix applied to one copy but not the other
+    would break the cross-tier rank-identity the tests pin."""
     uids, inv = np.unique(cat, return_inverse=True)
     scores = np.bincount(inv, weights=weights)
     if conjunctive:
@@ -55,6 +62,64 @@ def exact_topk_numpy(cat: "np.ndarray", weights: "np.ndarray",
         return uids, scores
     order = np.lexsort((uids, -scores))[:k]
     return uids[order], scores[order]
+
+
+def bm25_idf(df, n_docs) -> np.ndarray:
+    """The reference's unclamped BM25 idf (QueryProcessor.cpp:28),
+    negative for df > N/2, over a scalar or an array of dfs — the one
+    numpy idf."""
+    df = np.asarray(df, dtype=np.float64)
+    return np.log((float(n_docs) - df + 0.5) / (df + 0.5))
+
+
+def score_blocks(n_postings, gap_bufs, tf_bufs, row_idf, lens,
+                 avg_len: float, cfg: EngineConfig = DEFAULT) -> list:
+    """Decode + BM25 over many compressed block rows in one numpy pass
+    → one ``(doc_ids, contribs)`` pair per row, in row order.
+
+    Row ``i`` holds ``n_postings[i]`` postings (whole chunks of one
+    term, see :func:`varbyte.decode_blocks`) of a term with idf
+    ``row_idf[i]`` (:func:`bm25_idf`); ``lens`` is the dense doc-length
+    array.  A doc with postings always has length ≥ 1, so ``dl == 0``
+    means the id is missing from the norms array (index / page-table
+    desync).  ``dl = 0`` MINIMIZES K and would silently MAXIMIZE the
+    score, so such postings are dropped instead, matching the
+    doc_stats-join tier's inner-join semantics.  The one numpy BM25:
+    the segment kernel and the driver-local tier both score here."""
+    n = np.asarray(n_postings, dtype=np.int64)
+    if n.size == 0:
+        return []
+    ids, tf = varbyte.decode_blocks(n, gap_bufs, tf_bufs,
+                                    cfg.postings_per_chunk)
+    tf = tf.astype(np.float64)
+    idf = np.repeat(np.asarray(row_idf, dtype=np.float64), n)
+    dl = np.zeros(ids.size)
+    m = ids < lens.size
+    dl[m] = lens[ids[m]]
+    ok = dl > 0
+    if not ok.all():
+        n = np.bincount(np.repeat(np.arange(n.size), n)[ok],
+                        minlength=n.size)
+        ids, tf, dl, idf = ids[ok], tf[ok], dl[ok], idf[ok]
+    k1, b = cfg.k1, cfg.b
+    K = k1 * ((1.0 - b) + b * dl / avg_len)
+    contrib = idf * (k1 + 1.0) * tf / (K + tf)
+    cut = np.cumsum(n)[:-1]
+    return list(zip(np.split(ids, cut), np.split(contrib, cut)))
+
+
+def rank_top_k(cand: DataFrame, k: int) -> DataFrame:
+    """(query_id, doc_id, score, ...) → (query_id, doc_id, score, rank),
+    rank 1..k per query under ``score DESC, doc_id ASC`` — the one
+    Spark ranking window of every tier."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    )
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "doc_id", "score", "rank")
+    )
 
 
 def queries_to_terms(spark: SparkSession, queries: dict[str, str],
@@ -141,14 +206,7 @@ def score_query_set(
     )
     if conjunctive:
         per_doc = per_doc.filter(F.col("n_matched") == F.col("n_terms"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cfg.top_k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_top_k(per_doc, cfg.top_k)
 
 
 def search(
@@ -166,8 +224,7 @@ def search(
     The query separator table follows the engine mode: HW2 queries
     keep ``_`` intact (QueryProcessor.cpp:88), HW3 splits on it
     (ranking_optimizer/src/QueryProcessor.cpp:116) — SURVEY §2.11."""
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
-    qt = queries_to_terms(spark, {"q0": query}, mode)
+    qt = queries_to_terms(spark, {"q0": query}, cfg.query_mode)
     return score_query_set(
         postings, qt, lexicon, doc_stats, stats, cfg, conjunctive
     ).drop("query_id")
@@ -197,7 +254,7 @@ def search_compressed(
     array attached inside the decode kernel (skips the doc_stats
     join); ``query_terms`` — qt with df already attached (skips the
     lexicon join)."""
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
+    mode = cfg.query_mode
     all_terms = sorted(
         {t for q in queries.values() for t in tokenizer.split_query(q, mode)}
     )
@@ -309,32 +366,31 @@ def segment_topk_candidates(
     ``chunk_counters``: optional (total, decoded) accumulator pair for
     bench/pytest accounting of chunks seen vs chunks decoded.
 
-    Emits each segment's exact top-k per query; the global top-k per
-    query is a subset under the same (score DESC, doc_id ASC) order
-    (the TakeOrdered argument — see :func:`search_segmented`).
-    Callers add the tiny global ranking window over
-    n_segs × n_queries × k candidate rows.
+    Each run of same-segment rows in an Arrow batch is decoded and
+    scored by one :func:`score_blocks` call (chunk-cut rows are spliced
+    first).  Emits each segment's exact top-k per query; the global
+    top-k per query is a subset under the same (score DESC, doc_id
+    ASC) order (the TakeOrdered argument — see
+    :func:`search_segmented`).  Callers add the tiny global ranking
+    window (:func:`rank_top_k`) over n_segs × n_queries × k candidate
+    rows.
     """
-    import numpy as np
     import pandas as pd
-
-    from cs6913_web_search_engines_spark.functions import varbyte
 
     if len_lookup is None:
         raise ValueError("segment kernel requires the norms broadcast; "
                          "use search_compressed beyond norms-in-RAM scale")
     multi = "query_ids" in cand.columns
     tagged = multi or "query_id" in cand.columns
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
-    qterms = {qid: tokenizer.split_query(q, mode) for qid, q in queries.items()}
+    qterms = {qid: tokenizer.split_query(q, cfg.query_mode)
+              for qid, q in queries.items()}
     all_terms = sorted({t for ts in qterms.values() for t in ts})
     if dfs is None:
         dfs = {r["term"]: r["df"] for r in
                lexicon.filter(block_codec.sql_in("term", all_terms))
                .select("term", "df").collect()}
-    n_docs = float(stats["total_docs"])
-    idf = {t: float(np.log((n_docs - dfs.get(t, 0) + 0.5)
-                           / (dfs.get(t, 0) + 0.5))) for t in all_terms}
+    idf = dict(zip(all_terms, bm25_idf([dfs.get(t, 0) for t in all_terms],
+                                       stats["total_docs"]).tolist()))
     term2q: dict[str, list] = {}
     if not tagged:
         for qid, ts in qterms.items():
@@ -344,7 +400,6 @@ def segment_topk_candidates(
     avg = float(stats["avg_len"])
     k1, b = cfg.k1, cfg.b
     top_k = cfg.top_k
-    chunk = cfg.postings_per_chunk
     _SKIP_COLS = ("cut_ub", "chunk_counts", "chunk_max_tfs",
                   "chunk_gap_bytes", "chunk_tf_bytes")
     chunk_skip = tagged and all(c in cand.columns for c in _SKIP_COLS)
@@ -356,6 +411,34 @@ def segment_topk_candidates(
     t2q_b = sc.broadcast(term2q)
     idf_b = sc.broadcast(idf)
     nt_b = sc.broadcast(n_terms_by_q)
+
+    def kept_chunks(idf_t, n, gaps, tfs, cut, ccounts, cmaxtfs, cgbytes,
+                    ctbytes):
+        """(n, gap bytes, tf bytes, chunks seen, chunks kept) of one
+        row after dropping the chunks whose bound falls below ``cut``.
+        Mixed-generation guard: rows encoded before the per-chunk
+        byte-size arrays existed read them as null — no random access
+        without the sizes, so they decode whole."""
+        cc = np.asarray(ccounts, dtype=np.int64)
+        if (cut is None or pd.isna(cut) or idf_t <= 0 or cmaxtfs is None
+                or cgbytes is None or ctbytes is None):
+            return n, gaps, tfs, cc.size, cc.size
+        mt = np.asarray(cmaxtfs, dtype=np.float64)
+        ub_c = idf_t * (k1 + 1.0) * mt / (k_min_len + mt)
+        # 1e-9 margin: cross-engine ULP drift may only add decode,
+        # never skip a live chunk
+        ki = np.flatnonzero(ub_c >= (float(cut) - 1e-9))
+        if ki.size == cc.size:
+            return n, gaps, tfs, cc.size, cc.size
+        go = np.concatenate(([0], np.cumsum(cgbytes)))
+        to = np.concatenate(([0], np.cumsum(ctbytes)))
+        # kept chunks are all full (only a block's LAST chunk can be
+        # partial), so the per-chunk delta resets stay aligned after
+        # dropping chunks
+        return (int(cc[ki].sum()),
+                b"".join(gaps[go[i]:go[i + 1]] for i in ki),
+                b"".join(tfs[to[i]:to[i + 1]] for i in ki),
+                cc.size, ki.size)
 
     def kernel(batches):
         trim_zip_importers()
@@ -400,99 +483,49 @@ def segment_topk_candidates(
             acc.clear()
 
         for pdf in batches:
+            terms = pdf["term"].tolist()
+            n = pdf["n_postings"].to_numpy(np.int64).copy()
+            gaps, tfs = pdf["doc_gaps"].tolist(), pdf["tfs"].tolist()
             if multi:
-                qids = pdf["query_ids"]
+                targets = pdf["query_ids"].tolist()
+            elif tagged:
+                targets = [(q,) for q in pdf["query_id"]]
             else:
-                qids = pdf["query_id"] if tagged else pdf["term"]
+                targets = [t2q.get(t, ()) for t in terms]
             if chunk_skip:
-                extras = zip(pdf["cut_ub"], pdf["chunk_counts"],
-                             pdf["chunk_max_tfs"], pdf["chunk_gap_bytes"],
-                             pdf["chunk_tf_bytes"])
-            else:
-                extras = ((None,) * 5 for _ in range(len(pdf)))
-            for (qid_row, term, seg, n, gaps, tfs), (
-                cut, ccounts, cmaxtfs, cgbytes, ctbytes,
-            ) in zip(
-                zip(qids, pdf["term"], pdf["seg"], pdf["n_postings"],
-                    pdf["doc_gaps"], pdf["tfs"]),
-                extras,
-            ):
-                seg = int(seg)
-                if seg != cur_seg:
-                    flush()           # rows sorted by seg → one
-                    cur_seg = seg     # segment resident at a time
+                seen = kept = 0
+                for i, extra in enumerate(zip(
+                        pdf["cut_ub"], pdf["chunk_counts"],
+                        pdf["chunk_max_tfs"], pdf["chunk_gap_bytes"],
+                        pdf["chunk_tf_bytes"])):
+                    if extra[1] is not None:
+                        n[i], gaps[i], tfs[i], s_, k_ = kept_chunks(
+                            idfs[terms[i]], n[i], gaps[i], tfs[i], *extra)
+                        seen, kept = seen + s_, kept + k_
+                if chunk_counters is not None:
+                    chunk_counters[0].add(seen)
+                    chunk_counters[1].add(kept)
+            # rows are sorted by seg, so each segment is one run per
+            # batch (and may continue into the next batch): one decode
+            # + score pass per run, one segment resident at a time
+            segs = pdf["seg"].to_numpy(np.int64)
+            starts = np.flatnonzero(
+                np.diff(segs, prepend=segs[:1] - 1)).tolist()
+            for lo, hi in zip(starts, starts[1:] + [segs.size]):
+                if segs[lo] != cur_seg:
+                    flush()
+                    cur_seg = segs[lo]
                     if nrows >= 1 << 20:
                         yield drain()
-                n = int(n)
-                buf_g, buf_t = bytes(gaps), bytes(tfs)
-                if chunk_skip and ccounts is not None:
-                    cc = np.asarray(ccounts, dtype=np.int64)
-                    n_kept = cc.size
-                    # Mixed-generation guard: rows encoded before the
-                    # per-chunk byte-size arrays existed read as null
-                    # under the new schema — they can't be chunk-cut
-                    # (no random access without the sizes), so fall
-                    # back to full-block decode instead of raising on
-                    # np.asarray(None).
-                    if (cut is not None and not pd.isna(cut)
-                            and idfs[term] > 0
-                            and cmaxtfs is not None
-                            and cgbytes is not None
-                            and ctbytes is not None):
-                        mt = np.asarray(cmaxtfs, dtype=np.float64)
-                        ub_c = idfs[term] * (k1 + 1.0) * mt / (k_min_len + mt)
-                        # 1e-9 margin: cross-engine ULP drift may only
-                        # add decode, never skip a live chunk
-                        keep = ub_c >= (float(cut) - 1e-9)
-                        if not keep.all():
-                            gb = np.asarray(cgbytes, dtype=np.int64)
-                            tb = np.asarray(ctbytes, dtype=np.int64)
-                            go = np.zeros(gb.size + 1, dtype=np.int64)
-                            np.cumsum(gb, out=go[1:])
-                            to = np.zeros(tb.size + 1, dtype=np.int64)
-                            np.cumsum(tb, out=to[1:])
-                            ki = np.flatnonzero(keep)
-                            n_kept = ki.size
-                            # kept chunks are all full (only a block's
-                            # LAST chunk can be partial), so the
-                            # per-chunk delta resets in delta_decode
-                            # stay aligned after dropping chunks
-                            buf_g = b"".join(
-                                buf_g[go[i]:go[i + 1]] for i in ki)
-                            buf_t = b"".join(
-                                buf_t[to[i]:to[i + 1]] for i in ki)
-                            n = int(cc[ki].sum())
-                    if chunk_counters is not None:
-                        chunk_counters[0].add(int(cc.size))
-                        chunk_counters[1].add(int(n_kept))
-                    if n == 0:
-                        continue
-                ids = varbyte.delta_decode(varbyte.decode(buf_g, n), chunk)
-                tf = varbyte.decode(buf_t, n).astype(np.float64)
-                dl = np.zeros(ids.size)
-                m = ids < lens.size
-                dl[m] = lens[ids[m]]
-                # A doc with postings always has length ≥ 1, so dl == 0
-                # means the id is missing from the norms array (index /
-                # page-table desync).  dl = 0 MINIMIZES K and would
-                # silently MAXIMIZE the score — drop instead, matching
-                # the doc_stats-join tier's inner-join semantics.
-                ok = dl > 0
-                if not ok.all():
-                    ids, tf, dl = ids[ok], tf[ok], dl[ok]
-                K = k1 * ((1.0 - b) + b * dl / avg)
-                contrib = idfs[term] * (k1 + 1.0) * tf / (K + tf)
-                if multi:
-                    # shared decode: the (ids, contrib) arrays are
-                    # appended by reference for every query that kept
-                    # this block — no per-query copy
-                    for qid in qid_row:
-                        acc.setdefault(qid, []).append((ids, contrib))
-                elif tagged:
-                    acc.setdefault(qid_row, []).append((ids, contrib))
-                else:
-                    for qid in t2q.get(term, ()):
-                        acc.setdefault(qid, []).append((ids, contrib))
+                rows = (np.flatnonzero(n[lo:hi]) + lo).tolist()
+                scored = score_blocks(
+                    n[rows], [gaps[i] for i in rows], [tfs[i] for i in rows],
+                    [idfs[terms[i]] for i in rows], lens, avg, cfg)
+                # shared decode: a row's (ids, contribs) pair is
+                # appended by reference for every query it feeds
+                for i, pair in zip(rows, scored):
+                    for qid in targets[i]:
+                        acc.setdefault(qid, []).append(pair)
         flush()
         yield drain()
         trim_zip_importers()
@@ -528,7 +561,6 @@ def search_segmented(
     cfg: EngineConfig = DEFAULT,
     len_lookup=None,
     conjunctive: bool = False,
-    num_partitions: int | None = None,
     dfs: dict[str, int] | None = None,
 ) -> DataFrame:
     """Distributed segment-at-a-time exact top-k over the compressed
@@ -559,16 +591,9 @@ def search_segmented(
         spark, blocks.drop("query_id") if "query_id" in blocks.columns
         else blocks,
         lexicon, stats, queries, cfg, len_lookup=len_lookup,
-        conjunctive=conjunctive, num_partitions=num_partitions, dfs=dfs,
+        conjunctive=conjunctive, dfs=dfs,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= cfg.top_k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return rank_top_k(cand, cfg.top_k)
 
 
 def attach_content(results: DataFrame, documents: DataFrame) -> DataFrame:

@@ -62,8 +62,7 @@ def bm25_rerank(
     Query tokenization follows ``cfg.length_norm`` like every other
     query tier (an hw2 config would otherwise score hw2 lengths over
     hw3-split terms — internally inconsistent and oracle-divergent)."""
-    mode = "hw2" if cfg.length_norm == "hw2" else "hw3"
-    qt = qe.queries_to_terms(spark, queries, mode)
+    qt = qe.queries_to_terms(spark, queries, cfg.query_mode)
     cands = qe.score_query_set(
         postings, qt, lexicon, doc_stats, stats, replace(cfg, top_k=topn)
     ).select("query_id", "doc_id", F.col("score").alias("bm25"))

@@ -365,3 +365,27 @@ def test_zip_importer_trim_keeps_imports_working(spark):
            .first())
     assert row["fresh"] and row["same_archive"] and row["has_vectors"]
     assert row["lost"] == 0
+
+
+def test_perfbench_probe_targets_exist():
+    # the traced benchmark patches these names; a rename or deletion
+    # must fail here, not in a traced run.  varbyte.delta_decode stays
+    # a probe target (and a public codec function) even with no engine
+    # caller.
+    from cs6913_web_search_engines_spark.engine import QueryEngine
+    from cs6913_web_search_engines_spark.functions import varbyte
+    from cs6913_web_search_engines_spark.operators import pruning
+    from perfbench import tracing, workloads
+
+    targets = [(QueryEngine, "_search_local"), (qe, "exact_topk_numpy"),
+               (varbyte, "decode"), (varbyte, "delta_decode"),
+               (qe, "search_segmented"), (pruning, "search_pruned")]
+    before = [vars(o)[a] for o, a in targets]
+    tr = tracing.Tracer(True)
+    try:
+        workloads.install_probes(tr)
+        assert all(isinstance(vars(o)[a], tracing._Probe)
+                   for o, a in targets)
+    finally:
+        tr.unpatch()
+    assert all(vars(o)[a] is f for (o, a), f in zip(targets, before))

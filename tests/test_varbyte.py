@@ -135,3 +135,45 @@ def test_decode_blocks_mixed_rows_match_per_row(rows_src, chunk):
     docs, tfs = _batched(rows, chunk)
     assert docs.tolist() == want_docs.tolist()
     assert tfs.tolist() == want_tfs.tolist()
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(st.tuples(st.lists(st.integers(min_value=0, max_value=300),
+                                min_size=1, max_size=80),
+                       st.integers(min_value=0, max_value=1000)),
+             min_size=0, max_size=8),
+    st.sampled_from([1, 3, 16, 64]),
+)
+def test_score_blocks_matches_per_row_loop(rows_src, chunk):
+    # the segment kernel's former per-row loop is the reference: same
+    # values to the last bit, doc ids without a length (beyond the
+    # norms array or length 0) dropped, rows left empty kept in place
+    from cs6913_web_search_engines_spark.config import EngineConfig
+    from cs6913_web_search_engines_spark.operators import query_exec as qe
+
+    cfg = EngineConfig(postings_per_chunk=chunk)
+    lens = np.arange(1200, dtype=np.int32) % 7      # every 7th id: 0
+    avg, k1, b = 3.25, cfg.k1, cfg.b
+    rows, dfs = [], []
+    for gaps_src, df in rows_src:
+        doc_ids = np.cumsum(np.asarray(gaps_src, dtype=np.int64) + 1) - 1
+        rows.append(_block_row(doc_ids, doc_ids % 5 + 1, chunk))
+        dfs.append(df)
+    idf = qe.bm25_idf(dfs, 1000)
+    got = qe.score_blocks([r[0] for r in rows], [r[1] for r in rows],
+                          [r[2] for r in rows], idf, lens, avg, cfg)
+    assert len(got) == len(rows)
+    for (n, g, t), df, (ids, contrib) in zip(rows, dfs, got):
+        want_ids = varbyte.delta_decode(varbyte.decode(g, n), chunk)
+        tf = varbyte.decode(t, n).astype(np.float64)
+        dl = np.zeros(want_ids.size)
+        m = want_ids < lens.size
+        dl[m] = lens[want_ids[m]]
+        ok = dl > 0
+        want_ids, tf, dl = want_ids[ok], tf[ok], dl[ok]
+        row_idf = float(np.log((1000.0 - df + 0.5) / (df + 0.5)))
+        K = k1 * ((1.0 - b) + b * dl / avg)
+        want = row_idf * (k1 + 1.0) * tf / (K + tf)
+        assert ids.tolist() == want_ids.tolist()
+        assert contrib.tobytes() == want.tobytes()
